@@ -217,6 +217,13 @@ object Order {
 
   /** order.py:201 `order_blocks` — the block-level reading order.
     *
+    * Index-keyed: every annotation is resolved by its position, so each
+    * occurrence of a duplicated id keeps its own box through the sort,
+    * the column assignment and the per-column sort, as the reference's
+    * annotation objects do. The reference gates block membership by id
+    * (order.py:364), so duplicate ids landing in DIFFERENT columns may
+    * read differently there; that case is not pinned.
+    *
     * @param anns (id, box) per block; boxes absolute or relative
     * @param pageWidth page width for absolute→relative transform
     * @param pageHeight page height
@@ -232,32 +239,15 @@ object Order {
       ioaColumnThreshold: Double = 0.9
   ): Seq[(Int, String)] = {
     if (anns.isEmpty) return Nil
-    // Duplicate ids resolve through id-keyed maps in the Python
-    // reference (last-wins box lookup, block membership by id-set —
-    // every same-id occurrence rides each block containing the id),
-    // which the index-keyed hot path below cannot reproduce. Such
-    // inputs never arise from AnnIdBuilder-driven pipelines over
-    // distinct spans, but they are legal at this API: dispatch them
-    // to the literal port so reference parity holds on every input.
-    val seenIds = new java.util.HashSet[String](anns.length * 2)
-    var di = 0
-    while (di < anns.length) {
-      if (!seenIds.add(anns(di)._1))
-        return orderBlocksById(anns, pageWidth, pageHeight,
-          startingPointTolerance, brokenLineTolerance, heightTolerance,
-          ioaColumnThreshold)
-      di += 1
-    }
-    // Index-keyed hot path (the groupWordsIntoLinesIdx precedent): the
-    // string-keyed Map lookups and per-COMPARISON sort-key evaluation
-    // (sortBy re-evaluates its key function each comparison — for the
-    // final per-column sort that was one BigDecimal-allocating
-    // pyRound2 pair per comparison) are replaced by key arrays
-    // computed once per annotation and the same stable TimSort
-    // (Double.compare is the total order Ordering[Double] uses).
-    // With ids unique (guaranteed above), id-keyed and index-keyed
-    // resolution coincide: algorithm, tie-breaks and output are
-    // identical to [[orderBlocksById]] (OrderSpec pins the
+    // Index-keyed rewrite (the groupWordsIntoLinesIdx precedent) of the
+    // id-keyed port [[orderBlocksById]]: the string-keyed Map lookups
+    // and per-COMPARISON sort-key evaluation (sortBy re-evaluates its
+    // key function each comparison — for the final per-column sort
+    // that was one BigDecimal-allocating pyRound2 pair per comparison)
+    // are replaced by key arrays computed once per annotation and the
+    // same stable TimSort (Double.compare is the total order
+    // Ordering[Double] uses). On unique ids the two coincide: algorithm,
+    // tie-breaks and output are identical (OrderSpec pins the
     // equivalence on randomized inputs).
     val n = anns.length
     val relArr = new Array[BBox](n)
@@ -375,12 +365,10 @@ object Order {
     sortedBlocks.toList.zipWithIndex.map { case (ai, j) => (j + 1, anns(ai)._1) }
   }
 
-  /** The literal order.py:201 port over id-keyed maps — the hot path
-    * above is the index-keyed rewrite of exactly this body; it remains
-    * the semantics of record for inputs with DUPLICATE ids (last-wins
-    * `rel` lookup, block membership by id — matching Python's
-    * dict-keyed annotation resolution), to which [[orderBlocks]]
-    * dispatches.
+  /** The literal order.py:201 port over id-keyed maps, kept only as
+    * the unique-id reference that [[orderBlocks]] is checked against.
+    * Its maps make a duplicated id resolve to its LAST box, which the
+    * reference does not do, so it says nothing about duplicate ids.
     */
   private[graft] def orderBlocksById(
       anns: Seq[(String, BBox)],

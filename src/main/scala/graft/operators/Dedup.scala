@@ -8,29 +8,12 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB): every variant shuffles only small keys
   * (hashes / signatures / band buckets), never full payloads;
   * candidate generation is a hash-bucket equi-join, and only candidate
-  * PAIRS (a tiny fraction) are verified. Signature computation is pure
-  * Column expressions (codegen'd, no UDFs) except SimHash, which is a
-  * typed mapPartitions kernel (64 bit-votes don't fit whole-stage
-  * codegen limits as one expression tree).
+  * PAIRS (a tiny fraction) are verified. Signatures come from typed
+  * one-pass Scala kernels ([[minhashSig]], SimHash's mapPartitions):
+  * nested Column `transform` lambdas re-evaluate the shingle subtree
+  * once per hash slot, which Catalyst cannot CSE away.
   */
 object Dedup {
-
-  /** MinHash signature, pure Column space:
-    * sig[i] = min over distinct char-k-shingles s of xxhash64(s, i).
-    *
-    * NOTE: kept for reference/tests, but [[minhashSignatures]] (typed
-    * kernel) is what the LSH operators use — nested `transform`
-    * lambdas re-evaluate the shingle subtree once per outer index
-    * (64× per row), which is a 50× slowdown Catalyst cannot CSE away.
-    */
-  def minhashSignature(text: Column, k: Int, numHashes: Int): Column = {
-    val norm = lower(regexp_replace(text, "\\s+", " "))
-    val sh = array_distinct(
-      transform(sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
-        i => norm.substr(i, lit(k))))
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(sh, s => xxhash64(s, i))))
-  }
 
   /** Normalized distinct char-k-shingles (pure Scala) — THE shingle
     * kernel of the whole dedup module, semantics-matched to the SQL

@@ -152,15 +152,14 @@ class CheckpointSpec extends AnyFunSuite {
     val resumed = Checkpoint.runAllBucketed(spark, srcDir, outDir, cfg)
     assert(resumed.forall(_.skipped))
 
-    // cross-protocol adoption: runAll (staged protocol) over a dir the
-    // BUCKETED protocol populated must refuse — its _DONE_ markers
-    // describe a different provenance, and skipping on them would
-    // serve the bucketed run's data for runAll's (possibly different)
+    // runAll over a dir populated from ANOTHER source must refuse — its
+    // _DONE_ markers describe a different layout, and skipping on them
+    // would serve that run's data for runAll's (possibly different)
     // input with all-green results
     val eCross = intercept[IllegalArgumentException] {
       Checkpoint.runAll(turns, outDir, 4, cfg)
     }
-    assert(eCross.getMessage.contains("_STAGED_DONE"))
+    assert(eCross.getMessage.contains("different source layout"))
 
     // re-bucketing the source invalidates the output's markers: a
     // resume against the NEW layout must be rejected, not silently
@@ -189,6 +188,40 @@ class CheckpointSpec extends AnyFunSuite {
       Checkpoint.runAllBucketed(spark, srcDir, staleData.toString, cfg)
     }
     assert(e3.getMessage.contains("_SRC_LAYOUT"))
+
+    // a dir left by the older staged protocol (_STAGED_DONE, no
+    // _SRC_LAYOUT record) is refused by runAll before any bucketing
+    val oldStaged = Files.createTempDirectory("graft_ckpt_old")
+    Files.writeString(oldStaged.resolve("_STAGED_DONE"), """{"num_chunks":4}""")
+    val e4 = intercept[IllegalArgumentException] {
+      Checkpoint.runAll(turns, oldStaged.toString, 4, cfg)
+    }
+    assert(e4.getMessage.contains("clear the output dir"))
+    assert(!Files.exists(oldStaged.resolve("_staged")))
+  }
+
+  test("the first failed chunk is noticed at once and queued chunks never start") {
+    // chunk 0 is slow and chunk 1 fails fast: the failure must surface
+    // without waiting on chunk 0, and the chunks waiting for a pool slot
+    // (4..7) must never start
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val slowS = 5L
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Checkpoint.runChunksOverlapped(0 until 8, { k =>
+        started.add(k)
+        if (k == 1) throw new IllegalStateException("chunk 1 failed")
+        if (k < 4) release.await(slowS, java.util.concurrent.TimeUnit.SECONDS)
+        Checkpoint.ChunkResult(k, 0L, skipped = false)
+      })
+    }
+    val waitedS = (System.nanoTime() - t0) / 1e9
+    release.countDown()
+    Thread.sleep(300)
+    assert(e.getMessage == "chunk 1 failed")
+    assert(waitedS < slowS, s"failure surfaced after ${waitedS}s, behind the slow chunk")
+    assert((4 until 8).forall(k => !started.contains(k)), s"started: $started")
   }
 
   test("resume with a mismatched numChunks is rejected, not silently lossy") {
@@ -211,6 +244,20 @@ class CheckpointSpec extends AnyFunSuite {
     val outDir = Files.createTempDirectory("graft_ckpt_fresh")
       .resolve("nested").resolve("out").toString
     assert(Checkpoint.runAll(turns, outDir, 2, cfg).length == 2)
+  }
+
+  test("runAll reports every chunk, empty ones included") {
+    // 3 conversations over 8 chunks: at least 5 chunks are empty, and
+    // partitionBy writes no chunk=k source dir for them
+    import spark.implicits._
+    val turns = Turns.synth(spark, TestSpark.sfDir).filter($"turn_idx" === 0).limit(3)
+    val cfg = ExtractConfig(saltChunkSize = 16)
+    val outDir = Files.createTempDirectory("graft_ckpt_empty").toString
+    val results = Checkpoint.runAll(turns, outDir, 8, cfg)
+    assert(results.map(_.chunk) == (0 until 8))
+    assert(results.count(_.rows == 0) >= 5 && results.map(_.rows).sum == 3)
+    assert(Checkpoint.readOutput(spark, outDir).count() == 3)
+    assert(Checkpoint.runAll(turns, outDir, 8, cfg).forall(_.skipped))
   }
 
   test("resume against a different (or missing) schema fingerprint is rejected with a clear error") {

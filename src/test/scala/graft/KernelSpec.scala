@@ -144,19 +144,16 @@ class OrderSpec extends AnyFunSuite {
       assert(fast == legacy, s"round $round: $anns")
     }
   }
-  test("duplicate ids keep the id-keyed reference semantics (last-wins box)") {
-    // order.py resolves annotations through id-keyed dicts: with a
-    // duplicated id, EVERY occurrence uses the LAST occurrence's box.
-    // Here X appears with a top box and again with a bottom box, so
-    // both X entries must read at the bottom position (after A) —
-    // an index-keyed reading would put the first X before A.
+  test("duplicate ids: each occurrence keeps its own box") {
+    // order.py sorts and places annotation OBJECTS, so a duplicated id
+    // read in one column keeps each occurrence at its own position: the
+    // top X reads before A, the bottom X after it
     val anns = Seq(
       ("X", BBox(50, 100, 950, 250, absCoords = true)),
       ("A", BBox(50, 400, 950, 550, absCoords = true)),
       ("X", BBox(50, 700, 950, 850, absCoords = true)))
     val res = Order.orderBlocks(anns, 1000, 1000)
-    assert(res == Seq((1, "A"), (2, "X"), (3, "X")), res.toString)
-    assert(res == Order.orderBlocksById(anns, 1000, 1000, 0.005, 0.003, 2.0, 0.9))
+    assert(res == Seq((1, "X"), (2, "A"), (3, "X")), res.toString)
   }
 }
 
