@@ -879,7 +879,9 @@ object SparkEntry {
     // recomputes every cosine with DuckDB's own
     // list_cosine_similarity over the same planted CTE.
     "q_decontaminate_semantic" -> ((s, dir) => {
-      val (corpus, base) = plantedCorpus(s, dir, nSources = 20, levels = 5, idStep = 1000)
+      // idStep 10000: planted ids stay clear of the real vec_ids at
+      // every scale factor (at 1000 they collided past 1000 rows)
+      val (corpus, base) = plantedCorpus(s, dir, nSources = 20, levels = 5, idStep = 10000)
       Similarity.semanticDecontaminate(
           corpus, base.filter(col("vec_id") < 20), "vec_id", "v", 0.97)
         .select(col("doc_id"), col("bench_id"),
@@ -2137,7 +2139,7 @@ object SparkEntry {
       // semantic decontamination: DuckDB's own cosine over the same
       // planted CTE; argmax via row_number, verdict at full precision
       "q_decontaminate_semantic" ->
-        s"""WITH ${plantedCorpusSql(20, 5, 1000)},
+        s"""WITH ${plantedCorpusSql(20, 5, 10000)},
            b AS (SELECT vec_id AS bench_id, v AS bv FROM src WHERE vec_id < 20),
            scored AS (
              SELECT c.vec_id AS doc_id, b.bench_id,

@@ -43,16 +43,19 @@ object Geometry {
   }
 
   /** box.py:757 `merge_boxes` — smallest box containing all. Single
-    * pass (this runs once per emitted text line in the hot kernel).
+    * pass over an iterator (this runs once per emitted text line and
+    * per block in the hot kernel, so callers map lazily).
     */
-  def mergeBoxes(boxes: Iterable[BBox]): BBox = {
-    require(boxes.nonEmpty, "merge_boxes of empty sequence")
-    val abs = boxes.head.absCoords
+  def mergeBoxes(boxes: IterableOnce[BBox]): BBox = {
+    val it = boxes.iterator
+    require(it.hasNext, "merge_boxes of empty sequence")
     var ulx = Double.MaxValue; var uly = Double.MaxValue
     var lrx = Double.MinValue; var lry = Double.MinValue
-    val it = boxes.iterator
+    var abs = false
+    var first = true
     while (it.hasNext) {
       val b = it.next()
+      if (first) { abs = b.absCoords; first = false }
       if (b.ulx < ulx) ulx = b.ulx
       if (b.uly < uly) uly = b.uly
       if (b.lrx > lrx) lrx = b.lrx
@@ -79,8 +82,23 @@ object Geometry {
     * `new java.math.BigDecimal(x)` takes that exact value, whereas
     * `BigDecimal(x)` (via Double.toString) would see the shortest
     * decimal repr "2.675" and round it UP to 2.68.
+    *
+    * Fast path, bit-identical to that BigDecimal result: for
+    * |x·100| < 1e9 the product `y = x*100` is off the exact one by at
+    * most 1.2e-7, so unless `y` lies within 1e-6 of a .5 tie the exact
+    * value rounds to the same integer k as `y`, and BigDecimal's
+    * `doubleValue` of k/100 (a compact value at scale 2) is exactly
+    * `k / 100.0`. A zero k is +0.0 there, as here. Near-ties, large
+    * values and NaN take the BigDecimal route.
     */
-  def pyRound2(x: Double): Double =
-    new java.math.BigDecimal(x)
-      .setScale(2, java.math.RoundingMode.HALF_EVEN).doubleValue()
+  def pyRound2(x: Double): Double = {
+    val y = x * 100.0
+    val frac = y - math.floor(y)
+    if (math.abs(y) < 1e9 && math.abs(frac - 0.5) > 1e-6) {
+      val k = math.rint(y)
+      if (k == 0.0) 0.0 else k / 100.0
+    } else
+      new java.math.BigDecimal(x)
+        .setScale(2, java.math.RoundingMode.HALF_EVEN).doubleValue()
+  }
 }

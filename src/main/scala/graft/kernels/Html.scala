@@ -98,7 +98,9 @@ object Html {
     val nameStart = i
     while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '-' || s.charAt(i) == ':')) i += 1
     val name = s.substring(nameStart, i).toLowerCase(java.util.Locale.ROOT)
-    val attrs = mutable.Map.empty[String, String]
+    // immutable small maps (Map1..Map4) for the usual few attributes;
+    // a repeated name keeps its last value, as before
+    var attrs = Map.empty[String, String]
     var selfClosing = false
     var done = false
     while (i < n && !done) {
@@ -121,21 +123,21 @@ object Html {
             i += 1
             val vStart = i
             while (i < n && s.charAt(i) != q) i += 1
-            attrs(aName) = s.substring(vStart, math.min(i, n))
+            attrs = attrs.updated(aName, s.substring(vStart, math.min(i, n)))
             if (i < n) i += 1
           } else {
             val vStart = i
             while (i < n && !s.charAt(i).isWhitespace && s.charAt(i) != '>') i += 1
-            attrs(aName) = s.substring(vStart, i)
+            attrs = attrs.updated(aName, s.substring(vStart, i))
           }
         } else if (aName.nonEmpty) {
-          attrs(aName) = ""
+          attrs = attrs.updated(aName, "")
         } else if (i < n && s.charAt(i) != '>' && s.charAt(i) != '/') {
           i += 1 // junk char; skip to avoid infinite loop
         }
       }
     }
-    (StartTag(name, attrs.toMap, start, i, selfClosing), i)
+    (StartTag(name, attrs, start, i, selfClosing), i)
   }
 
   /** Decode the common HTML entities. Used at word level; word spans

@@ -1,19 +1,20 @@
 package graft.kernels
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import graft.model.BBox
-import Geometry.mergeBoxes
 
 /** Synthetic text-line generation from words — re-derivation of the
   * reference's `TextLineGenerator`
   * (deepdoctection/pipe/order.py:389-524): rows by y-center membership
-  * (via [[Order.groupWordsIntoLinesIdx]]), sub-lines split where the
-  * horizontal gap between consecutive words exceeds `paragraphBreak`
-  * (relative coords), recursive re-split of emitted sub-lines —
-  * including the reference's reset-only-on-single-row accumulator
-  * quirk (order.py:517-519).
+  * (via [[Order.wordLines]]), sub-lines split where the horizontal gap
+  * between consecutive words exceeds `paragraphBreak` (relative
+  * coords), recursive re-split of emitted sub-lines — including the
+  * reference's reset-only-on-single-row accumulator quirk
+  * (order.py:517-519).
   *
-  * Index-based core (hot path); the id-keyed API wraps it.
+  * Index-array core ([[linesOf]], the hot path); the id-keyed and
+  * `List` APIs are views of it.
   */
 object Lines {
 
@@ -22,10 +23,15 @@ object Lines {
     */
   final case class LineResult(box: BBox, childIds: List[String])
 
-  /** Index-keyed result for the hot path. */
-  final case class LineIdxResult(box: BBox, childIdx: List[Int])
+  /** A detected line over the caller's word indices, in line order. */
+  final class LineIdxResult(val box: BBox, val words: Array[Int]) {
+    def childIdx: IndexedSeq[Int] = ArraySeq.unsafeWrapArray(words)
+  }
 
-  /** order.py:423 `create_detection_result`, index-based core. */
+  /** order.py:423 `create_detection_result` over `boxes` by index.
+    * `precomputedOrder` may pass the triples the caller already has
+    * from [[Order.groupWordsIntoLinesIdx]] on the same boxes.
+    */
   def createLinesIdx(
       boxes: IndexedSeq[BBox],
       pageWidth: Double,
@@ -35,82 +41,129 @@ object Lines {
       highestLevel: Boolean = true,
       precomputedOrder: List[(Int, Int, Int)] = null
   ): List[LineIdxResult] = {
-    if (boxes.isEmpty) return Nil
-    // the caller may pass the triples it already computed for word
-    // ordering (identical input → identical result)
-    val wordOrder =
-      if (precomputedOrder != null) precomputedOrder
-      else Order.groupWordsIntoLinesIdx(boxes)
-    var numberRows = 0
-    for ((_, line, _) <- wordOrder) if (line > numberRows) numberRows = line
-    if (numberRows == 1 && !highestLevel) return Nil
-
-    // bucket word indices by line in one pass (keeps wordOrder order)
-    val rowBuckets = Array.fill(numberRows + 1)(List.newBuilder[Int])
-    for ((_, line, wi) <- wordOrder) rowBuckets(line) += wi
-
-    val out = mutable.ListBuffer.empty[LineIdxResult]
-    var numberRow = 1
-    while (numberRow <= numberRows) {
-      // word indices of this row, sorted by ulx (order.py:466-469;
-      // the stable List sort is kept for tie order, then copied to an
-      // array — the loop below indexes perRow(idx) per gap comparison,
-      // which on the List was an O(idx) traversal, O(n²) per row)
-      val perRow: Array[Int] =
-        rowBuckets(numberRow).result().sortBy(wi => boxes(wi).ulx).toArray
-
-      def emitMerged(wis: Seq[Int]): Unit =
-        out += LineIdxResult(mergeBoxes(wis.map(boxes(_))), wis.toList)
-
-      def recurseOrMerge(wis: Seq[Int]): Boolean = {
-        // re-line the sub-line: it may span multiple visual lines
-        // (order.py:500-510); returns true if recursion emitted
-        val sub = wis.toIndexedSeq
-        val rec = createLinesIdx(sub.map(boxes(_)), pageWidth, pageHeight,
-          makeSubLines, paragraphBreak, highestLevel = false)
-        if (rec.nonEmpty) {
-          rec.foreach(lr => out += LineIdxResult(lr.box, lr.childIdx.map(sub(_))))
-          true
-        } else false
-      }
-
-      if (perRow.length < 2 || !makeSubLines) {
-        emitMerged(perRow)
-      } else {
-        // relative x-coords computed ONCE per row member (identical
-        // arithmetic to BBox.toRelative: ulx/pageWidth) instead of two
-        // BBox allocations per gap comparison
-        val relUlx = new Array[Double](perRow.length)
-        val relLrx = new Array[Double](perRow.length)
-        var j = 0
-        while (j < perRow.length) {
-          val b = boxes(perRow(j))
-          relUlx(j) = if (b.absCoords) b.ulx / pageWidth else b.ulx
-          relLrx(j) = if (b.absCoords) b.lrx / pageWidth else b.lrx
-          j += 1
+    val n = boxes.length
+    if (n == 0) return Nil
+    val members = IdxSort.identity(n)
+    val order =
+      if (precomputedOrder == null) Order.wordLines(boxes, members, n)
+      else {
+        val word = new Array[Int](n)
+        val line = new Array[Int](n)
+        var rows = 0
+        var p = 0
+        for ((_, l, wi) <- precomputedOrder) {
+          word(p) = wi; line(p) = l
+          if (l > rows) rows = l
+          p += 1
         }
-        var subLine = mutable.ListBuffer(perRow.head)
-        var idx = 1
-        while (idx < perRow.length) {
-          if (relUlx(idx) - relLrx(idx - 1) < paragraphBreak) {
-            subLine += perRow(idx)
+        new Order.WordLines(word, line, rows)
+      }
+    if (order.rows == 1 && !highestLevel) return Nil
+    val out = mutable.ArrayBuffer.empty[LineIdxResult]
+    linesOf(boxes, members, n, order, pageWidth, makeSubLines, paragraphBreak, out)
+    out.toList
+  }
+
+  /** The line core over the words `boxes(members(k))`, `k < n`, whose
+    * [[Order.wordLines]] is `order`. Appends the lines to `out`; their
+    * `words` hold values of `members`.
+    */
+  def linesOf(
+      boxes: IndexedSeq[BBox],
+      members: Array[Int],
+      n: Int,
+      order: Order.WordLines,
+      pageWidth: Double,
+      makeSubLines: Boolean,
+      paragraphBreak: Double,
+      out: mutable.ArrayBuffer[LineIdxResult]
+  ): Unit = {
+    val rows = order.rows
+    // member positions bucketed by line (lines 1..rows), each bucket in
+    // reading-position order: a counting sort, stable like the
+    // reference's per-row list appends
+    val start = new Array[Int](rows + 2)
+    var p = 0
+    while (p < n) { start(order.line(p) + 1) += 1; p += 1 }
+    var r = 1
+    while (r <= rows) { start(r + 1) += start(r); r += 1 }
+    val byRow = new Array[Int](n)
+    val next = java.util.Arrays.copyOf(start, rows + 1)
+    p = 0
+    while (p < n) {
+      val l = order.line(p)
+      byRow(next(l)) = order.word(p); next(l) += 1
+      p += 1
+    }
+    val ulx = new Array[Double](n) // the row sort key
+    var k = 0
+    while (k < n) { ulx(k) = boxes(members(k)).ulx; k += 1 }
+    // the gap between two words in relative x-coords (identical
+    // arithmetic to BBox.toRelative: ulx/pageWidth)
+    def gap(left: Int, right: Int): Double = {
+      val l = boxes(members(left)); val r = boxes(members(right))
+      (if (r.absCoords) r.ulx / pageWidth else r.ulx) -
+        (if (l.absCoords) l.lrx / pageWidth else l.lrx)
+    }
+    val sub = new Array[Int](n) // the current sub-line, as member values
+    r = 1
+    while (r <= rows) {
+      val s = start(r)
+      val e = start(r + 1)
+      // this row's words sorted by ulx (order.py:466-469)
+      IdxSort.sort(byRow, s, e, ulx, null)
+      if (e - s < 2 || !makeSubLines) {
+        var j = s
+        while (j < e) { sub(j - s) = members(byRow(j)); j += 1 }
+        emitMerged(boxes, sub, e - s, out)
+      } else {
+        sub(0) = members(byRow(s))
+        var subLen = 1
+        var j = s + 1
+        while (j < e) {
+          if (gap(byRow(j - 1), byRow(j)) < paragraphBreak) {
+            sub(subLen) = members(byRow(j)); subLen += 1
           } else {
             // reference resets the accumulator only when the recursion
             // found a single row (order.py:517-519) — quirk preserved
-            if (!recurseOrMerge(subLine.toList)) {
-              emitMerged(subLine.toList)
-              subLine = mutable.ListBuffer(perRow(idx))
+            if (!recurse(boxes, sub, subLen, pageWidth, makeSubLines, paragraphBreak, out)) {
+              emitMerged(boxes, sub, subLen, out)
+              sub(0) = members(byRow(j)); subLen = 1
             }
           }
-          if (idx == perRow.length - 1) {
-            if (!recurseOrMerge(subLine.toList)) emitMerged(subLine.toList)
-          }
-          idx += 1
+          if (j == e - 1 &&
+              !recurse(boxes, sub, subLen, pageWidth, makeSubLines, paragraphBreak, out))
+            emitMerged(boxes, sub, subLen, out)
+          j += 1
         }
       }
-      numberRow += 1
+      r += 1
     }
-    out.toList
+  }
+
+  /** order.py:500-510: re-line a sub-line, which may span several
+    * visual lines. A sub-line on one row is left to the caller (false);
+    * otherwise its lines are emitted (true).
+    */
+  private def recurse(boxes: IndexedSeq[BBox], sub: Array[Int], n: Int, pageWidth: Double,
+      makeSubLines: Boolean, paragraphBreak: Double,
+      out: mutable.ArrayBuffer[LineIdxResult]): Boolean =
+    if (Order.singleRow(boxes, sub, n)) false
+    else {
+      val members = java.util.Arrays.copyOf(sub, n)
+      linesOf(boxes, members, n, Order.wordLines(boxes, members, n), pageWidth,
+        makeSubLines, paragraphBreak, out)
+      true
+    }
+
+  /** One line of `words(0 until n)` under their merged box. */
+  private def emitMerged(boxes: IndexedSeq[BBox], words: Array[Int], n: Int,
+      out: mutable.ArrayBuffer[LineIdxResult]): Unit = {
+    val ws = java.util.Arrays.copyOf(words, n)
+    val bs = new Array[BBox](n)
+    var i = 0
+    while (i < n) { bs(i) = boxes(ws(i)); i += 1 }
+    out += new LineIdxResult(Geometry.mergeBoxes(bs), ws)
   }
 
   /** Id-keyed API (fixtures/tests); delegates to the index core. */
@@ -125,7 +178,6 @@ object Lines {
     val ids = words.map(_._1).toIndexedSeq
     createLinesIdx(words.map(_._2).toIndexedSeq, pageWidth, pageHeight,
       makeSubLines, paragraphBreak, highestLevel)
-      .map(lr => LineIdxResult(lr.box, lr.childIdx))
-      .map(lr => LineResult(lr.box, lr.childIdx.map(ids(_))))
+      .map(lr => LineResult(lr.box, lr.words.map(ids(_)).toList))
   }
 }

@@ -17,7 +17,7 @@ object Match {
 
   /** @return (childIdx, parentIdx) pairs, in row-major (child-major)
     *         order for the matrix variants — matching numpy
-    *         `nonzero()` ordering.
+    *         `nonzero()` ordering. A view of [[forEachMatch]].
     */
   def matchByIntersection(
       parents: IndexedSeq[BBox],
@@ -27,30 +27,44 @@ object Match {
       useWeightedIntersections: Boolean = false,
       maxParentOnly: Boolean = false
   ): Seq[(Int, Int)] = {
+    val out = mutable.ListBuffer.empty[(Int, Int)]
+    forEachMatch(parents, children, rule, threshold, useWeightedIntersections, maxParentOnly)(
+      (c, p) => out += ((c, p)))
+    out.toList
+  }
+
+  /** The matching core: calls `f(childIdx, parentIdx)` for each pair of
+    * [[matchByIntersection]], in the same order, without building them.
+    */
+  def forEachMatch(
+      parents: IndexedSeq[BBox],
+      children: IndexedSeq[BBox],
+      rule: String,
+      threshold: Double,
+      useWeightedIntersections: Boolean,
+      maxParentOnly: Boolean
+  )(f: (Int, Int) => Unit): Unit = {
     require(rule == "iou" || rule == "ioa", "matching rule must be either iou or ioa")
-    if (parents.isEmpty || children.isEmpty) return Nil
+    if (parents.isEmpty || children.isEmpty) return
     val nC = children.length
     val nP = parents.length
 
     if (rule == "iou") {
-      val out = mutable.ListBuffer.empty[(Int, Int)]
       var c = 0
       while (c < nC) {
         var p = 0
         while (p < nP) {
-          if (boxIou(children(c), parents(p)) > threshold) out += ((c, p))
+          if (boxIou(children(c), parents(p)) > threshold) f(c, p)
           p += 1
         }
         c += 1
       }
-      out.toList
     } else if (rule == "ioa" && maxParentOnly && !useWeightedIntersections) {
       // match.py:141-151 fused: the per-child argmax needs one row of
       // the IoA matrix at a time, so the full nC×nP matrix (one array
       // allocation per child per call, on the per-word hot path) is
       // never materialized — same arithmetic, same first-max-wins
       // order, same output pairs.
-      val out = mutable.ListBuffer.empty[(Int, Int)]
       var c = 0
       while (c < nC) {
         val childArea = area(children(c))
@@ -64,10 +78,9 @@ object Match {
           if (v > bestV) { bestV = v; best = p }
           p += 1
         }
-        if (best >= 0) out += ((c, best))
+        if (best >= 0) f(c, best)
         c += 1
       }
-      out.toList
     } else {
       // ioa matrix transposed: m(c)(p) = |parent_p ∩ child_c| / |child_c|
       val m = Array.ofDim[Double](nC, nP)
@@ -84,7 +97,6 @@ object Match {
       if (maxParentOnly) {
         // match.py:141-151: zero out below-threshold, argmax per child
         // (first max wins, as numpy argmax), skip children with no match
-        val out = mutable.ListBuffer.empty[(Int, Int)]
         c = 0
         while (c < nC) {
           var best = -1
@@ -95,10 +107,9 @@ object Match {
             if (v > bestV) { bestV = v; best = p }
             p += 1
           }
-          if (best >= 0) out += ((c, best))
+          if (best >= 0) f(c, best)
           c += 1
         }
-        out.toList
       } else {
         val weighted =
           if (!useWeightedIntersections) m
@@ -109,17 +120,15 @@ object Match {
               row.map(_ * k)
             }
           }
-        val out = mutable.ListBuffer.empty[(Int, Int)]
         c = 0
         while (c < nC) {
           var p = 0
           while (p < nP) {
-            if (weighted(c)(p) > threshold) out += ((c, p))
+            if (weighted(c)(p) > threshold) f(c, p)
             p += 1
           }
           c += 1
         }
-        out.toList
       }
     }
   }

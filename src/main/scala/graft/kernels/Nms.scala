@@ -1,6 +1,5 @@
 package graft.kernels
 
-import scala.collection.mutable
 import graft.model.BBox
 import Geometry.iou
 
@@ -25,17 +24,39 @@ object Nms {
 
     def confidence(c: Candidate): Double = if (prio.nonEmpty && c.category == prio) 1.0 else c.score
 
-    // stable sort by score descending (torchvision sorts descending;
-    // ties keep input order)
-    val sorted = anns.sortBy(c => -confidence(c))
-    val kept = mutable.ListBuffer.empty[Candidate]
-    for (cand <- sorted) {
-      val suppressed = kept.exists(k => iou(k.box, cand.box) > threshold)
-      if (!suppressed) kept += cand
-    }
-    val keptIds = kept.map(_.id).toSet
+    val kept = survivors(anns.map(_.box).toIndexedSeq, anns.map(confidence).toArray, threshold)
+      .map(anns(_).id)
+    val keptIds = kept.toSet
     // preserve priority anns even if greedy would drop them
     val extra = priorityIds.filterNot(keptIds.contains)
-    kept.map(_.id).toList ++ extra
+    kept.toList ++ extra
+  }
+
+  /** The greedy core: indices of the candidates that survive, in
+    * visiting order — stable by score descending (torchvision sorts
+    * descending; ties keep input order).
+    */
+  def survivors(boxes: IndexedSeq[BBox], scores: Array[Double], threshold: Double): Array[Int] = {
+    val n = boxes.length
+    val negScore = new Array[Double](n)
+    var i = 0
+    while (i < n) { negScore(i) = -scores(i); i += 1 }
+    val visit = IdxSort.identity(n)
+    IdxSort.sort(visit, 0, n, negScore, null)
+    val kept = new Array[Int](n)
+    var nKept = 0
+    i = 0
+    while (i < n) {
+      val cand = boxes(visit(i))
+      var suppressed = false
+      var k = 0
+      while (k < nKept && !suppressed) {
+        if (iou(boxes(kept(k)), cand) > threshold) suppressed = true
+        k += 1
+      }
+      if (!suppressed) { kept(nKept) = visit(i); nKept += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(kept, nKept)
   }
 }

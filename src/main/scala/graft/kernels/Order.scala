@@ -14,23 +14,17 @@ import Geometry.pyRound2
   * `mapPartitions`, never shuffles.
   *
   * Tie-breaking parity notes (SURVEY §7.4): all sorts are stable
-  * (the reference relies on Python Timsort; we use Scala's stable
-  * `sortBy`), coordinate tie-break keys use Python `round(x, 2)`
-  * semantics via [[Geometry.pyRound2]].
+  * (the reference relies on Python Timsort; the hot path uses
+  * [[IdxSort]] over primitive key arrays, the id-keyed reference port
+  * Scala's stable `sortBy`), coordinate tie-break keys use Python
+  * `round(x, 2)` semantics via [[Geometry.pyRound2]].
   */
 object Order {
 
   /** Mutable box used where the reference mutates `BoundingBox` in
     * place (column growth, rounding inside `_connected_components`).
-    * Equality mirrors the reference's value-semantics equality on the
-    * 2-decimal rounded key (box.py:448-459).
     */
-  private final class MBox(var ulx: Double, var uly: Double, var lrx: Double, var lry: Double) {
-    def height: Double = lry - uly
-    def key: (Double, Double, Double, Double) =
-      (pyRound2(ulx), pyRound2(uly), pyRound2(lrx), pyRound2(lry))
-    def toBBox: BBox = BBox(ulx, uly, lrx, lry, absCoords = false)
-  }
+  private[graft] final class MBox(var ulx: Double, var uly: Double, var lrx: Double, var lry: Double)
 
   /** order.py:71 `group_words_into_lines`.
     *
@@ -51,84 +45,85 @@ object Order {
       .map { case (pos, line, i) => (pos, line, ids(i)) }
   }
 
-  /** Index-based core of [[groupWordsIntoLines]] (hot path: no string
-    * keys, no boxing beyond the result list).
+  /** [[groupWordsIntoLines]] by index: triples (position, line, index
+    * into `boxes`). A view of [[wordLines]].
     */
   def groupWordsIntoLinesIdx(boxes: IndexedSeq[BBox]): List[(Int, Int, Int)] = {
-    val n = boxes.length
+    val wl = wordLines(boxes, IdxSort.identity(boxes.length), boxes.length)
+    List.tabulate(boxes.length)(p => (p + 1, wl.line(p), wl.word(p)))
+  }
+
+  /** Result of [[wordLines]]: the word at 0-based reading position `p`
+    * is member `word(p)` (an index into the `members` argument) on
+    * line `line(p)`; `rows` is the number of lines.
+    */
+  final class WordLines(val word: Array[Int], val line: Array[Int], val rows: Int)
+
+  /** The row predicate of order.py:102-106: does `box` join the row
+    * with bounds `upper`/`lower`?
+    */
+  private def joinsRow(upper: Double, lower: Double, box: BBox): Boolean = {
+    val rowCy = (upper + lower) / 2.0
+    (upper < box.cy && box.cy < lower) || (box.uly < rowCy && rowCy < box.lry)
+  }
+
+  /** True when [[wordLines]] over the same members finds one row: every
+    * later box joins the row the first box opens. O(n), no allocation.
+    */
+  private[graft] def singleRow(boxes: IndexedSeq[BBox], members: Array[Int], n: Int): Boolean = {
+    val first = boxes(members(0))
+    var k = 1
+    while (k < n) {
+      if (!joinsRow(first.uly, first.lry, boxes(members(k)))) return false
+      k += 1
+    }
+    true
+  }
+
+  /** Index core of [[groupWordsIntoLines]] over the words
+    * `boxes(members(k))`, `k < n`, in that order: primitive arrays
+    * throughout, no tuples, no boxed sort keys.
+    */
+  def wordLines(boxes: IndexedSeq[BBox], members: Array[Int], n: Int): WordLines = {
     val wordRow = new Array[Int](n) // orig row idx per word, in input order
-    val rowUpper = mutable.ArrayBuffer.empty[Double]
-    val rowLower = mutable.ArrayBuffer.empty[Double]
-    var w = 0
-    while (w < n) {
-      val box = boxes(w)
-      var rowFound = false
+    val rowUpper = new Array[Double](n)
+    val rowLower = new Array[Double](n)
+    val cxKey = new Array[Double](n)
+    var rows = 0
+    var k = 0
+    while (k < n) {
+      val box = boxes(members(k))
+      cxKey(k) = box.cx
+      var row = -1
       var idx = 0
-      while (idx < rowUpper.length && !rowFound) {
-        val upper = rowUpper(idx); val lower = rowLower(idx)
-        val rowCy = (upper + lower) / 2.0
-        if ((upper < box.cy && box.cy < lower) || (box.uly < rowCy && rowCy < box.lry)) {
-          wordRow(w) = idx
-          rowFound = true
-        }
+      while (idx < rows && row < 0) {
+        if (joinsRow(rowUpper(idx), rowLower(idx), box)) row = idx
         idx += 1
       }
-      if (!rowFound) {
-        rowUpper += box.uly; rowLower += box.lry
-        wordRow(w) = rowUpper.length - 1
+      if (row < 0) {
+        rowUpper(rows) = box.uly; rowLower(rows) = box.lry
+        row = rows
+        rows += 1
       }
-      w += 1
+      wordRow(k) = row
+      k += 1
     }
     // order.py:120-123: map used with original index as key — the
     // value is the ORIGINAL index of the row at that sorted position
     // (ported literally, including the inverted lookup).
-    val sortedOrig: Array[Int] =
-      rowUpper.indices.sortBy(i => rowUpper(i)).toArray // position -> orig idx
-    // stable sort by (row position, x-center) via a comparator over
-    // precomputed key arrays — sortBy re-evaluates its key function
-    // (allocating a boxed tuple) at EVERY comparison, which was a
-    // measured kernel hot spot; java.util.Arrays.sort on a boxed
-    // index array is the same TimSort (stable) and Double.compare is
-    // the same total order Ordering.Double uses. Output identical.
-    val rowKey = new Array[Int](n)
-    val cxKey = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      rowKey(i) = sortedOrig(wordRow(i))
-      cxKey(i) = boxes(i).cx
-      i += 1
-    }
-    val order = new Array[Integer](n)
-    i = 0
-    while (i < n) { order(i) = Integer.valueOf(i); i += 1 }
-    java.util.Arrays.sort(order, new java.util.Comparator[Integer] {
-      override def compare(a: Integer, b: Integer): Int = {
-        val ai = a.intValue; val bi = b.intValue
-        val c = java.lang.Integer.compare(rowKey(ai), rowKey(bi))
-        if (c != 0) c else java.lang.Double.compare(cxKey(ai), cxKey(bi))
-      }
-    })
-    val numberRows = rowUpper.length
-    val outB = List.newBuilder[(Int, Int, Int)]
-    i = 0
-    while (i < n) {
-      val wi = order(i).intValue
-      outB += ((i + 1, numberRows - wordRow(wi), wi))
-      i += 1
-    }
-    outB.result()
+    val sortedOrig = IdxSort.identity(rows) // position -> orig idx
+    IdxSort.sort(sortedOrig, 0, rows, rowUpper, null)
+    // stable sort by (row position, x-center)
+    val rowKey = rowLower // reused: no longer needed
+    k = 0
+    while (k < n) { rowKey(k) = sortedOrig(wordRow(k)); k += 1 }
+    val order = IdxSort.identity(n)
+    IdxSort.sort(order, 0, n, rowKey, cxKey)
+    val line = new Array[Int](n)
+    var p = 0
+    while (p < n) { line(p) = rows - wordRow(order(p)); p += 1 }
+    new WordLines(order, line, rows)
   }
-
-  /** order.py:135 `group_lines_into_lines` — sort line annotations by
-    * y-center; returns (order, order, id).
-    */
-  def groupLinesIntoLines(lines: Seq[(String, BBox)]): List[(Int, Int, String)] =
-    lines
-      .map { case (id, box) => (box.cy, id) }
-      .sortBy(_._1)
-      .zipWithIndex
-      .map { case ((_, id), i) => (i + 1, i + 1, id) }
-      .toList
 
   /** order.py:341 `_consolidate_columns`: child→parent where child
     * column is ≥`ioaThreshold` inside parent (fraction of child area
@@ -136,10 +131,9 @@ object Order {
     * matching parent per child wins. Unmatched columns are renumbered
     * 0,1,2,… in discovery order.
     */
-  private def consolidateColumns(columns: IndexedSeq[MBox], ioaThreshold: Double): Map[Int, Int] = {
+  private def consolidateColumns(columns: collection.IndexedSeq[MBox], ioaThreshold: Double): Array[Int] = {
     val n = columns.length
-    if (n == 0) return Map.empty
-    val dict = mutable.LinkedHashMap.empty[Int, Int]
+    val dict = Array.fill(n)(-1)
     var i = 0
     while (i < n) {
       var j = 0
@@ -159,68 +153,102 @@ object Order {
     var counter = 0
     var k = 0
     while (k < n) {
-      if (!dict.contains(k)) { dict(k) = counter; counter += 1 }
+      if (dict(k) < 0) { dict(k) = counter; counter += 1 }
       k += 1
     }
-    dict.toMap
+    dict
   }
 
-  private final case class Component(
-      var top: Double,
-      var bottom: Double,
-      var left: Double,
-      cols: mutable.ArrayBuffer[(Int, MBox)]
-  )
+  /** order.py:296-298: the distinct consolidation targets, in column
+    * order. `BoundingBox.__eq__` compares the EXACT internal coords
+    * (box.py:448-459 `_key`), not the 2-decimal-rounded values —
+    * rounding happens later, inside `_connected_components`. Two
+    * parents that would only collide after rounding stay separate
+    * here, exactly as in the reference.
+    */
+  private def distinctTargets(columns: collection.IndexedSeq[MBox], consolidated: Array[Int]): collection.IndexedSeq[MBox] = {
+    val out = mutable.ArrayBuffer.empty[MBox]
+    for (idx <- columns.indices) {
+      val t = columns(consolidated(idx))
+      if (!out.exists(o => o.ulx == t.ulx && o.uly == t.uly && o.lrx == t.lrx && o.lry == t.lry))
+        out += t
+    }
+    out
+  }
 
   /** order.py:164 `_connected_components`: group columns that
     * vertically overlap; within a component sort columns by rounded
     * (ulx, uly) (mutating the boxes' rounded coords, as the reference
-    * does); components sorted by top. Returns flattened (origIdx, box)
-    * in final column order.
+    * does); components sorted by top. Returns the column indices in
+    * final column order.
+    *
+    * The reference rounds every column of every component and re-sorts
+    * on each insertion (order.py:189-196). Rounding is idempotent and
+    * the per-component sort is stable, so each column is rounded once,
+    * right after its own insertion, and each component sorted once at
+    * the end; only the component order, which decides where the next
+    * column goes, is kept sorted on every insertion.
     */
-  private def connectedComponents(columns: IndexedSeq[MBox]): List[(Int, MBox)] = {
-    val comps = mutable.ArrayBuffer.empty[Component]
-    for ((col, idx) <- columns.zipWithIndex) {
-      var found = false
+  private[graft] def connectedComponents(columns: collection.IndexedSeq[MBox]): Array[Int] = {
+    val m = columns.length
+    val top = new Array[Double](m)
+    val bottom = new Array[Double](m)
+    val compOf = new Array[Int](m)
+    val comps = new Array[Int](m) // component ids in current order
+    var nComps = 0
+    var idx = 0
+    while (idx < m) {
+      val col = columns(idx)
+      var found = -1
       var c = 0
-      while (c < comps.length && !found) {
-        val comp = comps(c)
-        if ((comp.top < col.uly && col.uly < comp.bottom) ||
-            (comp.top < col.lry && col.lry < comp.bottom) ||
-            (col.uly < comp.top && comp.top < col.lry) ||
-            (col.uly < comp.bottom && comp.bottom < col.lry)) {
-          comp.top = math.min(comp.top, col.uly)
-          comp.bottom = math.max(comp.bottom, col.lry)
-          comp.left = col.ulx
-          comp.cols += ((idx, col))
-          found = true
+      while (c < nComps && found < 0) {
+        val id = comps(c)
+        if ((top(id) < col.uly && col.uly < bottom(id)) ||
+            (top(id) < col.lry && col.lry < bottom(id)) ||
+            (col.uly < top(id) && top(id) < col.lry) ||
+            (col.uly < bottom(id) && bottom(id) < col.lry)) {
+          top(id) = math.min(top(id), col.uly)
+          bottom(id) = math.max(bottom(id), col.lry)
+          found = id
         }
         c += 1
       }
-      if (!found)
-        comps += Component(col.uly, col.lry, col.ulx, mutable.ArrayBuffer((idx, col)))
-      // reference rounds ulx/uly in place and re-sorts on every
-      // insertion (order.py:189-196)
-      for (comp <- comps) {
-        for ((_, box) <- comp.cols) {
-          box.ulx = pyRound2(box.ulx)
-          box.uly = pyRound2(box.uly)
-        }
-        val sortedCols = comp.cols.sortBy { case (_, b) => (b.ulx, b.uly) }
-        comp.cols.clear(); comp.cols ++= sortedCols
+      if (found < 0) {
+        found = nComps
+        top(found) = col.uly; bottom(found) = col.lry
+        comps(nComps) = found
+        nComps += 1
       }
-      val sortedComps = comps.sortBy(_.top)
-      comps.clear(); comps ++= sortedComps
+      compOf(idx) = found
+      col.ulx = pyRound2(col.ulx)
+      col.uly = pyRound2(col.uly)
+      IdxSort.sort(comps, 0, nComps, top, null)
+      idx += 1
     }
-    comps.toList.flatMap(_.cols)
+    // each component's columns, in insertion order, then stable-sorted
+    // by the rounded (ulx, uly)
+    val ulx = new Array[Double](m)
+    val uly = new Array[Double](m)
+    idx = 0
+    while (idx < m) { ulx(idx) = columns(idx).ulx; uly(idx) = columns(idx).uly; idx += 1 }
+    val out = new Array[Int](m)
+    var o = 0
+    var c = 0
+    while (c < nComps) {
+      val start = o
+      idx = 0
+      while (idx < m) { if (compOf(idx) == comps(c)) { out(o) = idx; o += 1 }; idx += 1 }
+      IdxSort.sort(out, start, o, ulx, uly)
+      c += 1
+    }
+    out
   }
 
   /** order.py:201 `order_blocks` — the block-level reading order.
     *
-    * Index-keyed: every annotation is resolved by its position, so each
-    * occurrence of a duplicated id keeps its own box through the sort,
-    * the column assignment and the per-column sort, as the reference's
-    * annotation objects do. The reference gates block membership by id
+    * Each occurrence keeps its own box through the sort, the column
+    * assignment and the per-column sort, as the reference's annotation
+    * objects do. The reference gates block membership by id
     * (order.py:364), so duplicate ids landing in DIFFERENT columns may
     * read differently there; that case is not pinned.
     *
@@ -238,39 +266,47 @@ object Order {
       heightTolerance: Double = 2.0,
       ioaColumnThreshold: Double = 0.9
   ): Seq[(Int, String)] = {
-    if (anns.isEmpty) return Nil
-    // Index-keyed rewrite (the groupWordsIntoLinesIdx precedent) of the
-    // id-keyed port [[orderBlocksById]]: the string-keyed Map lookups
-    // and per-COMPARISON sort-key evaluation (sortBy re-evaluates its
-    // key function each comparison — for the final per-column sort
-    // that was one BigDecimal-allocating pyRound2 pair per comparison)
-    // are replaced by key arrays computed once per annotation and the
-    // same stable TimSort (Double.compare is the total order
-    // Ordering[Double] uses). On unique ids the two coincide: algorithm,
-    // tie-breaks and output are identical (OrderSpec pins the
-    // equivalence on randomized inputs).
-    val n = anns.length
+    val ids = anns.map(_._1).toIndexedSeq
+    readingOrder(anns.map(_._2).toIndexedSeq, pageWidth, pageHeight, startingPointTolerance,
+      brokenLineTolerance, heightTolerance, ioaColumnThreshold)
+      .toList.zipWithIndex.map { case (ai, j) => (j + 1, ids(ai)) }
+  }
+
+  /** Index core of [[orderBlocks]]: the indices into `boxes` in reading
+    * order. Sort keys are computed once per box into primitive arrays
+    * (no per-comparison `pyRound2` or boxed tuples), and the sorts are
+    * stable with the reference's tie order. [[orderBlocksById]] pins the
+    * equivalence with the literal port on randomized inputs.
+    */
+  def readingOrder(
+      boxes: IndexedSeq[BBox],
+      pageWidth: Double,
+      pageHeight: Double,
+      startingPointTolerance: Double,
+      brokenLineTolerance: Double,
+      heightTolerance: Double,
+      ioaColumnThreshold: Double = 0.9
+  ): Array[Int] = {
+    val n = boxes.length
+    if (n == 0) return Array.emptyIntArray
     val relArr = new Array[BBox](n)
+    val cy = new Array[Double](n)
+    val cx = new Array[Double](n)
     var i = 0
-    while (i < n) { relArr(i) = anns(i)._2.toRelative(pageWidth, pageHeight); i += 1 }
+    while (i < n) {
+      val r = boxes(i).toRelative(pageWidth, pageHeight)
+      relArr(i) = r; cy(i) = r.cy; cx(i) = r.cx
+      i += 1
+    }
     // sortedAnns: original indices, stable-sorted by (cy, cx)
-    val order = new Array[Integer](n)
-    i = 0
-    while (i < n) { order(i) = Integer.valueOf(i); i += 1 }
-    java.util.Arrays.sort(order, new java.util.Comparator[Integer] {
-      override def compare(a: Integer, b: Integer): Int = {
-        val ba = relArr(a.intValue); val bb = relArr(b.intValue)
-        val c = java.lang.Double.compare(ba.cy, bb.cy)
-        if (c != 0) c else java.lang.Double.compare(ba.cx, bb.cx)
-      }
-    })
+    val order = IdxSort.identity(n)
+    IdxSort.sort(order, 0, n, cy, cx)
 
     val columns = mutable.ArrayBuffer.empty[MBox]
-    // (columnIdx, annIdx)
-    var readingBlocks = mutable.ListBuffer.empty[(Int, Int)]
+    val colOf = new Array[Int](n) // column of each ann
     var oi = 0
     while (oi < n) {
-      val ai = order(oi).intValue
+      val ai = order(oi)
       val box = relArr(ai)
       var columnFound = false
       var idx = 0
@@ -285,7 +321,7 @@ object Order {
         val fifth = math.abs(box.lry - col.uly) < heightTolerance * box.height
         if ((first && (fourth || fifth)) || (second && (fourth || fifth)) ||
             (third && (fourth || fifth))) {
-          readingBlocks += ((idx, ai))
+          colOf(ai) = idx
           col.ulx = math.min(box.ulx, col.ulx)
           col.uly = math.min(box.uly, col.uly)
           col.lrx = math.max(box.lrx, col.lrx)
@@ -296,73 +332,49 @@ object Order {
       }
       if (!columnFound) {
         columns += new MBox(box.ulx, box.uly, box.lrx, box.lry)
-        readingBlocks += ((columns.length - 1, ai))
+        colOf(ai) = columns.length - 1
       }
       oi += 1
     }
 
-    val consolidated = consolidateColumns(columns.toIndexedSeq, ioaColumnThreshold)
-    // order.py:296-298: dedupe columns via BoundingBox.__eq__, which
-    // compares the EXACT internal coords (box.py:448-459 `_key`), not
-    // the 2-decimal-rounded values — rounding happens later, inside
-    // `_connected_components`. Two parents that would only collide
-    // after rounding stay separate here, exactly as in the reference.
-    val consolidatedColumns = mutable.ArrayBuffer.empty[MBox]
-    val seenKeys = mutable.LinkedHashSet.empty[(Double, Double, Double, Double)]
-    for (idx <- columns.indices) {
-      val target = columns(consolidated(idx))
-      val exactKey = (target.ulx, target.uly, target.lrx, target.lry)
-      if (!seenKeys.contains(exactKey)) {
-        seenKeys += exactKey
-        consolidatedColumns += target
-      }
-    }
-
-    readingBlocks = readingBlocks.map { case (c, ai) => (consolidated.getOrElse(c, c), ai) }
-
-    val columnsBox = connectedComponents(consolidatedColumns.toIndexedSeq)
-    val columnsDict: Map[Int, Int] = columnsBox.zipWithIndex.map { case ((origIdx, _), k) => origIdx -> k }.toMap
-
-    val blocks = readingBlocks.toList
-      .map { case (c, ai) => (columnsDict.getOrElse(c, consolidated.getOrElse(c, c)), ai) }
-      .sortBy(_._1)
-    // rounded sort keys of the per-column block sort, once per ann
+    val consolidated = consolidateColumns(columns, ioaColumnThreshold)
+    val targets = distinctTargets(columns, consolidated)
+    val finalOrder = connectedComponents(targets)
+    val m = finalOrder.length
+    val rank = new Array[Int](m) // target index -> final column number
+    i = 0
+    while (i < m) { rank(finalOrder(i)) = i; i += 1 }
+    // column number per ann (order.py's two-step lookup, literally);
+    // numbers past the last column are never read, as in the reference
     val rUly = new Array[Double](n)
     val rUlx = new Array[Double](n)
+    val count = new Array[Int](m + 1)
     i = 0
     while (i < n) {
+      val c = consolidated(colOf(i))
+      colOf(i) = if (c < m) rank(c) else consolidated(c)
+      if (colOf(i) < m) count(colOf(i) + 1) += 1
       rUly(i) = pyRound2(relArr(i).uly)
       rUlx(i) = pyRound2(relArr(i).ulx)
       i += 1
     }
-    val maxBlockNumber = if (columnsDict.isEmpty) 0 else columnsDict.values.max
-    val sortedBlocks = mutable.ListBuffer.empty[Int]
-    val member = new Array[Boolean](n)
-    for (idx <- 0 to maxBlockNumber) {
-      val inBlock = blocks.filter(_._1 == idx)
-      if (inBlock.nonEmpty) {
-        java.util.Arrays.fill(member, false)
-        inBlock.foreach { case (_, ai) => member(ai) = true }
-        // collect members in sortedAnns order (the tie order the
-        // reference preserves), then stable-sort by rounded (uly, ulx)
-        val group = new java.util.ArrayList[Integer]()
-        var k = 0
-        while (k < n) {
-          val ai = order(k)
-          if (member(ai.intValue)) group.add(ai)
-          k += 1
-        }
-        group.sort(new java.util.Comparator[Integer] {
-          override def compare(a: Integer, b: Integer): Int = {
-            val c = java.lang.Double.compare(rUly(a.intValue), rUly(b.intValue))
-            if (c != 0) c else java.lang.Double.compare(rUlx(a.intValue), rUlx(b.intValue))
-          }
-        })
-        var g = 0
-        while (g < group.size()) { sortedBlocks += group.get(g).intValue; g += 1 }
-      }
+    // bucket anns by column in sortedAnns order (the tie order the
+    // reference preserves), then stable-sort each column by rounded
+    // (uly, ulx)
+    i = 0
+    while (i < m) { count(i + 1) += count(i); i += 1 }
+    val out = new Array[Int](count(m))
+    val next = java.util.Arrays.copyOf(count, m)
+    oi = 0
+    while (oi < n) {
+      val ai = order(oi)
+      val c = colOf(ai)
+      if (c < m) { out(next(c)) = ai; next(c) += 1 }
+      oi += 1
     }
-    sortedBlocks.toList.zipWithIndex.map { case (ai, j) => (j + 1, anns(ai)._1) }
+    i = 0
+    while (i < m) { IdxSort.sort(out, count(i), count(i + 1), rUly, rUlx); i += 1 }
+    out
   }
 
   /** The literal order.py:201 port over id-keyed maps, kept only as
@@ -417,26 +429,15 @@ object Order {
     }
 
     val consolidated = consolidateColumns(columns.toIndexedSeq, ioaColumnThreshold)
-    // order.py:296-298: dedupe columns via BoundingBox.__eq__ on the
-    // EXACT internal coords (see the hot path's twin comment)
-    val consolidatedColumns = mutable.ArrayBuffer.empty[MBox]
-    val seenKeys = mutable.LinkedHashSet.empty[(Double, Double, Double, Double)]
-    for (idx <- columns.indices) {
-      val target = columns(consolidated(idx))
-      val exactKey = (target.ulx, target.uly, target.lrx, target.lry)
-      if (!seenKeys.contains(exactKey)) {
-        seenKeys += exactKey
-        consolidatedColumns += target
-      }
-    }
+    val consolidatedColumns = distinctTargets(columns.toIndexedSeq, consolidated)
 
-    readingBlocks = readingBlocks.map { case (c, id) => (consolidated.getOrElse(c, c), id) }
+    readingBlocks = readingBlocks.map { case (c, id) => (consolidated(c), id) }
 
-    val columnsBox = connectedComponents(consolidatedColumns.toIndexedSeq)
-    val columnsDict: Map[Int, Int] = columnsBox.zipWithIndex.map { case ((origIdx, _), k) => origIdx -> k }.toMap
+    val columnsDict: Map[Int, Int] =
+      connectedComponents(consolidatedColumns).zipWithIndex.map { case (origIdx, k) => origIdx -> k }.toMap
 
     val blocks = readingBlocks.toList
-      .map { case (c, id) => (columnsDict.getOrElse(c, consolidated.getOrElse(c, c)), id) }
+      .map { case (c, id) => (columnsDict.getOrElse(c, consolidated(c)), id) }
       .sortBy(_._1)
     val maxBlockNumber = if (columnsDict.isEmpty) 0 else columnsDict.values.max
     val sortedBlocks = mutable.ListBuffer.empty[(Int, String)]

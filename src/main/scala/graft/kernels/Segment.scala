@@ -86,9 +86,11 @@ object Segment {
       val idx = style.indexOf(prop + ":")
       if (idx < 0) None
       else {
-        val p = style.substring(idx + prop.length + 1).dropWhile(_ == ' ')
-          .takeWhile(c => c.isDigit || c == '.')
-        if (p.isEmpty) None else Some(p.toDouble / 100.0)
+        var b = idx + prop.length + 1
+        while (b < style.length && style.charAt(b) == ' ') b += 1
+        var e = b
+        while (e < style.length && (style.charAt(e).isDigit || style.charAt(e) == '.')) e += 1
+        if (e == b) None else Some(style.substring(b, e).toDouble / 100.0)
       }
     }
     val left = pct("left")
@@ -124,8 +126,8 @@ object Segment {
 
     def ensurePending(): Pending = {
       if (pending == null)
-        pending = Pending(kindOf(tagStack), tagStack.exists(ChromeTags.contains),
-          tagStack.exists(DropTags.contains), tagStack.length, placementStack.head,
+        pending = Pending(kindOf(tagStack), tagStack.exists(ChromeTags),
+          tagStack.exists(DropTags), tagStack.length, placementStack.head,
           mutable.ListBuffer.empty)
       pending
     }
@@ -158,7 +160,7 @@ object Segment {
       case Html.Text(begin, end, raw) =>
         // script/style bodies and anything under head/template/svg is
         // never rendered content
-        if (!raw && !tagStack.exists(DropTags.contains)) {
+        if (!raw && !tagStack.exists(DropTags)) {
           // whitespace-only runs don't open a block
           var hasContent = false
           var i = begin
@@ -176,6 +178,8 @@ object Segment {
     val yCursors = mutable.Map.empty[Place, Double]
     val rendered = mutable.ArrayBuffer.empty[SegBlock]
 
+    // one word buffer for every block (copied out by toArray)
+    val words = mutable.ArrayBuffer.empty[SegWord]
     val blockIt = blocksOut.iterator
     while (blockIt.hasNext) {
       val b = blockIt.next()
@@ -189,7 +193,7 @@ object Segment {
       var y = yCursors.getOrElse(b.placement, startY)
       var x = x0
       var lineCount = 1
-      val words = mutable.ArrayBuffer.empty[SegWord]
+      words.clear()
       val runIt = b.runs.iterator
       while (runIt.hasNext) {
         val run = runIt.next()
@@ -211,9 +215,16 @@ object Segment {
         }
       }
       if (words.nonEmpty) {
-        val box = Geometry.mergeBoxes(words.map(_.box))
-        val totalChars = words.map(_.text.length).sum.toDouble
-        val anchorChars = words.filter(_.anchor).map(_.text.length).sum.toDouble
+        val box = Geometry.mergeBoxes(words.iterator.map(_.box))
+        var totalChars = 0
+        var anchorChars = 0
+        var k = 0
+        while (k < words.length) {
+          val w = words(k)
+          totalChars += w.text.length
+          if (w.anchor) anchorChars += w.text.length
+          k += 1
+        }
         rendered += SegBlock(
           kind = b.kind,
           begin = words.head.begin,
@@ -223,7 +234,7 @@ object Segment {
           chrome = b.chrome,
           dropped = b.dropped,
           tagDepth = b.depth,
-          linkDensity = if (totalChars <= 0) 0.0 else anchorChars / totalChars,
+          linkDensity = if (totalChars <= 0) 0.0 else anchorChars.toDouble / totalChars,
           textDensity = words.length.toDouble / lineCount,
           lineCount = lineCount
         )
@@ -282,7 +293,7 @@ object Segment {
           }
         }
         if (words.nonEmpty) {
-          val box = Geometry.mergeBoxes(words.map(_.box))
+          val box = Geometry.mergeBoxes(words.iterator.map(_.box))
           rendered += SegBlock(LayoutLabel.TEXT, words.head.begin, words.last.end, box,
             words.toArray, chrome = false, dropped = false, tagDepth = 0,
             linkDensity = 0.0, textDensity = words.length.toDouble / lineCount, lineCount = lineCount)

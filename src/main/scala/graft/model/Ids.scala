@@ -25,42 +25,34 @@ object Ids {
     md.reset()
     md.update(NamespaceDns)
     md.update(s.getBytes(StandardCharsets.UTF_8))
-    val h = md.digest()
-    h(6) = ((h(6) & 0x0f) | 0x30).toByte // version 3
-    h(8) = ((h(8) & 0x3f) | 0x80).toByte // RFC 4122 variant
-    val out = new Array[Char](36)
-    var i = 0
-    var p = 0
-    while (i < 16) {
-      if (i == 4 || i == 6 || i == 8 || i == 10) { out(p) = '-'; p += 1 }
-      val v = h(i) & 0xff
-      out(p) = Hex(v >>> 4); out(p + 1) = Hex(v & 0xf)
-      p += 2
-      i += 1
-    }
-    new String(out)
+    uuidString(md, new Array[Byte](36))
   }
 
-  private val Hex: Array[Char] = "0123456789abcdef".toCharArray
+  private val Hex: Array[Byte] = "0123456789abcdef".getBytes(StandardCharsets.ISO_8859_1)
 
   /** identifier.py:66 `get_uuid` — uuid3 of concatenated inputs. */
   def uuid3(inputs: String*): String = uuid3(inputs.mkString(""))
 
-  private def hexDigest(md: MessageDigest): String = {
-    val h = md.digest()
-    h(6) = ((h(6) & 0x0f) | 0x30).toByte
-    h(8) = ((h(8) & 0x3f) | 0x80).toByte
-    val out = new Array[Char](36)
-    var i = 0
-    var p = 0
-    while (i < 16) {
-      if (i == 4 || i == 6 || i == 8 || i == 10) { out(p) = '-'; p += 1 }
-      val v = h(i) & 0xff
+  /** Finish `md` into the version-3 UUID string. `out` (36 bytes) holds
+    * the digest in its first 16 bytes, then the hex text; the String is
+    * one ISO-8859-1 copy of it.
+    */
+  private def uuidString(md: MessageDigest, out: Array[Byte]): String = {
+    md.digest(out, 0, 16)
+    out(6) = ((out(6) & 0x0f) | 0x30).toByte // version 3
+    out(8) = ((out(8) & 0x3f) | 0x80).toByte // RFC 4122 variant
+    // hex digits are written back to front, so each digest byte is
+    // read before its slot is overwritten (byte i lands at 2i..2i+4)
+    var i = 15
+    var p = 36
+    while (i >= 0) {
+      val v = out(i) & 0xff
+      p -= 2
       out(p) = Hex(v >>> 4); out(p + 1) = Hex(v & 0xf)
-      p += 2
-      i += 1
+      if (i == 4 || i == 6 || i == 8 || i == 10) { p -= 1; out(p) = '-' }
+      i -= 1
     }
-    new String(out)
+    new String(out, 0, 36, StandardCharsets.ISO_8859_1)
   }
 
   /** Per-turn annotation-id factory: hoists the namespace + turnId
@@ -69,9 +61,11 @@ object Ids {
     * building the concatenated string. UTF-8 of a concatenation equals
     * the concatenation of UTF-8, so ids are byte-identical to
     * [[annId]] (IdsSpec pins the CPython vectors).
+    * It borrows the calling thread's digest: use a builder on the
+    * thread that made it.
     */
   final class AnnIdBuilder(turnId: String) {
-    private val md = MessageDigest.getInstance("MD5")
+    private val md = mdPool.get()
     // the whole message is assembled into ONE reusable buffer and fed
     // to the digest in a single update: the previous per-piece updates
     // (namespace, turnId, kind, digits, '_', digits — six engineUpdate
@@ -87,6 +81,7 @@ object Ids {
       System.arraycopy(t, 0, buf, 16, t.length)
       16 + t.length
     }
+    private val out = new Array[Byte](36)
 
     private def ensure(n: Int): Unit =
       if (n > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(n, buf.length * 2))
@@ -112,8 +107,14 @@ object Ids {
       p
     }
 
+    // the last kind's UTF-8 bytes: a turn asks for its ids kind by
+    // kind (blocks, then every word, then lines), so one entry hits
+    private var lastKind: String = _
+    private var lastKindBytes: Array[Byte] = _
+
     def annId(kind: String, begin: Int, end: Int): String = {
-      val kb = kind.getBytes(StandardCharsets.UTF_8)
+      if (!(kind eq lastKind)) { lastKind = kind; lastKindBytes = kind.getBytes(StandardCharsets.UTF_8) }
+      val kb = lastKindBytes
       ensure(prefixLen + kb.length + 23) // 2×(sign+10 digits) + '_'
       var p = prefixLen
       System.arraycopy(kb, 0, buf, p, kb.length)
@@ -123,7 +124,7 @@ object Ids {
       p = putInt(end, p + 1)
       md.reset()
       md.update(buf, 0, p)
-      hexDigest(md)
+      uuidString(md, out)
     }
   }
 

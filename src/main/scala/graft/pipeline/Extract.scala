@@ -1,10 +1,12 @@
 package graft.pipeline
 
-import scala.util.{Try, Success, Failure}
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.kernels.{Segment, Match, Nms, Order}
+import graft.kernels.{Lines, Match, Nms, Order, Segment}
 
 /** Pipeline configuration — mirrors the reference's
   * `conf_dd_one.yaml:145-186` knobs (tolerances, matching rule) plus
@@ -20,8 +22,10 @@ final case class ExtractConfig(
     maxParentOnly: Boolean = true,
     nmsThreshold: Double = 0.9,
     maxLinkDensity: Double = 0.4,
-    /** turns per salt bucket for skewed long conversations (north rule) */
-    saltChunkSize: Int = 256,
+    /** turns per salt bucket for skewed long conversations (north
+      * rule). A fine grain gives the exchange many keys, so even a small
+      * table spreads its work evenly over the partitions (SCALE.md). */
+    saltChunkSize: Int = 16,
     /** emit synthetic text lines (disable when the consumer doesn't
       * read them — saves a second line-grouping pass per block) */
     emitLines: Boolean = true,
@@ -97,20 +101,26 @@ final case class ExtractConfig(
   */
 object Extract {
 
-  /** Pure per-turn kernel. Never throws: parse failures quarantine into
-    * a row with `metrics.parseFailed = true` (reference:
-    * `MappingContextManager`, dd_core/mapper/maputils.py:41).
+  /** Pure per-turn kernel. Never throws: a row whose extraction fails —
+    * by any non-fatal error or by a stack overflow on hostile input —
+    * quarantines into a row with `metrics.parseFailed = true`
+    * (reference: `MappingContextManager`, dd_core/mapper/maputils.py:41)
+    * instead of failing the task.
     */
   def extractTurn(t: Turn, cfg: ExtractConfig = ExtractConfig()): ExtractedTurn = {
     val turnId = Ids.turnId(t.conv_id, t.turn_idx)
-    Try(extractTurnUnsafe(t, turnId, cfg)) match {
-      case Success(et) => et
-      case Failure(_) =>
+    try extractTurnUnsafe(t, turnId, cfg)
+    catch {
+      case NonFatal(_) | _: StackOverflowError =>
         ExtractedTurn(t.conv_id, t.turn_idx, turnId, t.role, t.ts, "", "", "und", "",
           Array.empty, Array.empty, Array.empty, Array.empty,
           TurnMetrics(0, 0, 0, 0, parseFailed = true))
     }
   }
+
+  /** Residual words' synthetic LINE block. */
+  private final case class ResLine(id: String, box: BBox, members: Array[Int],
+      text: String, begin: Int, end: Int)
 
   private def extractTurnUnsafe(t: Turn, turnId: String, cfg: ExtractConfig): ExtractedTurn = {
     val payload0 = if (t.text != null && t.text.nonEmpty) t.text
@@ -123,11 +133,10 @@ object Extract {
     // ---- NMS over block candidates (AnnotationNmsService analogue,
     // pipe/common.py:458; no-op for non-overlapping renders) ----
     val segBlocks = seg.blocks
-    val candidates = segBlocks.zipWithIndex.map { case (b, i) =>
-      Nms.Candidate(i.toString, b.box, 1.0, b.kind)
-    }
-    val surviving = Nms.suppress(candidates.toIndexedSeq, cfg.nmsThreshold).map(_.toInt).toSet
-    val blocksNms = segBlocks.zipWithIndex.filter { case (_, i) => surviving.contains(i) }.map(_._1)
+    val surviving = Nms.survivors(ArraySeq.unsafeWrapArray(segBlocks.map(_.box)),
+      Array.fill(segBlocks.length)(1.0), cfg.nmsThreshold)
+    java.util.Arrays.sort(surviving)
+    val blocksNms = surviving.map(segBlocks(_))
     // DetectResultGenerator back-fill (pipe/sub_layout.py:41-48): any
     // configured kind with no detection gets a whole-page placeholder
     val blocks0 =
@@ -140,6 +149,7 @@ object Extract {
             Array.empty, chrome = false, dropped = false, tagDepth = 0,
             linkDensity = 0.0, textDensity = 0.0, lineCount = 0))
       }
+    val nBlocks = blocks0.length
 
     // block ids (deterministic, content-derived)
     val annIds = new Ids.AnnIdBuilder(turnId) // one digest per turn, not per annotation
@@ -148,114 +158,136 @@ object Extract {
     // ---- words + word↔block assignment via the IoA matching kernel
     // (MatchingService analogue, pipe/common.py:271) ----
     val allWords = blocks0.flatMap(_.words)
+    val nWords = allWords.length
     // LMTokenClassifierService slot: per-word class via the configured
     // classifier (reference default OTHER when none)
+    val tokenClassifier = cfg.tokenClassifier.orNull
     def tokenClassOf(text: String): String =
-      cfg.tokenClassifier.fold(LayoutLabel.TOKEN_OTHER)(f => f(text))
+      if (tokenClassifier == null) LayoutLabel.TOKEN_OTHER else tokenClassifier(text)
     val wordIds =
       if (cfg.emitWordIds) allWords.map(w => annIds.annId(LayoutLabel.WORD, w.begin, w.end))
-      else Array.fill(allWords.length)("")
-    val parentBoxes = blocks0.map(_.box).toIndexedSeq
-    val childBoxes = allWords.map(_.box).toIndexedSeq
-    val parentOf = Array.fill(allWords.length)(-1)
+      else Array.fill(nWords)("")
+    val parentBoxes = ArraySeq.unsafeWrapArray(blocks0.map(_.box))
+    val childBoxes = ArraySeq.unsafeWrapArray(allWords.map(_.box))
+    val parentOf = Array.fill(nWords)(-1)
     // backfilled whole-page placeholders (indices >= realBlockCount)
     // must NOT act as match parents: their page-covering box gives
     // every word IoA = 1.0, which would steal residual words from the
     // residual-LINE path and silently drop their text (placeholders are
     // schema completeness, not content containers)
     val realBlockCount = blocksNms.length
-    Match.matchByIntersection(
-      parentBoxes, childBoxes, cfg.matchRule, cfg.matchThreshold,
-      maxParentOnly = cfg.maxParentOnly
-    ).foreach { case (c, p) => if (p < realBlockCount) parentOf(c) = p }
+    Match.forEachMatch(parentBoxes, childBoxes, cfg.matchRule, cfg.matchThreshold,
+      useWeightedIntersections = false, maxParentOnly = cfg.maxParentOnly) { (c, p) =>
+      if (p < realBlockCount) parentOf(c) = p
+    }
 
     // ---- per-block word ordering (TextOrderService level (a):
     // group_words_into_lines, pipe/order.py:71) ----
     val wordsByBlock: Array[Array[Int]] = {
-      val builders = Array.fill(blocks0.length)(new scala.collection.mutable.ArrayBuffer[Int])
+      val count = new Array[Int](nBlocks)
+      parentOf.foreach(p => if (p >= 0) count(p) += 1)
+      val byBlock = count.map(new Array[Int](_))
+      java.util.Arrays.fill(count, 0)
       var wi = 0
-      while (wi < allWords.length) {
+      while (wi < nWords) {
         val p = parentOf(wi)
-        if (p >= 0) builders(p) += wi
+        if (p >= 0) { byBlock(p)(count(p)) = wi; count(p) += 1 }
         wi += 1
       }
-      builders.map(_.toArray)
+      byBlock
     }
 
-    val orderedWords = Array.fill[Word](allWords.length)(null)
-    val blockTexts = Array.fill(blocks0.length)("")
-    val linesBuf = scala.collection.mutable.ArrayBuffer.empty[LineOut]
+    val orderedWords = new Array[Word](nWords)
+    // places `members` (word indices) under `parentId` in the reading
+    // order `wl`; returns their text, space-joined in that order
+    def placeWords(members: Array[Int], wl: Order.WordLines, parentId: String): String = {
+      var len = members.length
+      for (wi <- members) len += allWords(wi).text.length
+      val sb = new StringBuilder(len)
+      var p = 0
+      while (p < members.length) {
+        val wi = members(wl.word(p))
+        val w = allWords(wi)
+        orderedWords(wi) = Word(wordIds(wi), w.text, w.begin, w.end, w.box,
+          parentId, p + 1, wl.line(p), tokenClassOf(w.text))
+        if (sb.nonEmpty) sb.append(' ')
+        sb.append(w.text)
+        p += 1
+      }
+      sb.toString
+    }
+    def spanBegin(ws: Array[Int]): Int = {
+      var b = Int.MaxValue
+      var k = 0
+      while (k < ws.length) { b = math.min(b, allWords(ws(k)).begin); k += 1 }
+      b
+    }
+    def spanEnd(ws: Array[Int]): Int = {
+      var e = Int.MinValue
+      var k = 0
+      while (k < ws.length) { e = math.max(e, allWords(ws(k)).end); k += 1 }
+      e
+    }
+
+    val blockTexts = Array.fill(nBlocks)("")
+    val linesBuf = mutable.ArrayBuffer.empty[LineOut]
     // geometry rides alongside each emitted line for the line matcher
-    val lineBoxesBuf = scala.collection.mutable.ArrayBuffer.empty[BBox]
+    val lineBoxesBuf = mutable.ArrayBuffer.empty[BBox]
+    val lineRes = mutable.ArrayBuffer.empty[Lines.LineIdxResult]
     var bi = 0
-    while (bi < wordsByBlock.length) {
+    while (bi < nBlocks) {
       val wis = wordsByBlock(bi)
       if (wis.nonEmpty) {
-        val boxes: IndexedSeq[BBox] = wis.map(allWords(_).box).toIndexedSeq
-        val triples = Order.groupWordsIntoLinesIdx(boxes)
-        val sb = new StringBuilder
-        for ((pos, line, li) <- triples) {
-          val wi = wis(li)
-          val w = allWords(wi)
-          orderedWords(wi) = Word(wordIds(wi), w.text, w.begin, w.end, w.box,
-            blockIds(bi), pos, line, tokenClassOf(w.text))
-          if (sb.nonEmpty) sb.append(' ')
-          sb.append(w.text)
-        }
-        blockTexts(bi) = sb.toString
+        val wl = Order.wordLines(childBoxes, wis, wis.length)
+        blockTexts(bi) = placeWords(wis, wl, blockIds(bi))
 
         // ---- synthetic text lines (TextLineService analogue,
         // pipe/order.py:581): rows split at paragraph breaks ----
-        if (cfg.emitLines)
-        for (lr <- graft.kernels.Lines.createLinesIdx(boxes, seg.pageWidth, seg.pageHeight,
-            makeSubLines = true, cfg.paragraphBreak, precomputedOrder = triples)) {
-          val ws = lr.childIdx.map(wis(_))
-          val b = ws.map(allWords(_).begin).min
-          val e = ws.map(allWords(_).end).max
-          linesBuf += LineOut(annIds.annId(LayoutLabel.LINE, b, e), blockIds(bi), b, e, ws.length)
-          lineBoxesBuf += lr.box
+        if (cfg.emitLines) {
+          lineRes.clear()
+          Lines.linesOf(childBoxes, wis, wis.length, wl, seg.pageWidth,
+            makeSubLines = true, cfg.paragraphBreak, lineRes)
+          var li = 0
+          while (li < lineRes.length) {
+            val lr = lineRes(li)
+            val b = spanBegin(lr.words)
+            val e = spanEnd(lr.words)
+            linesBuf += LineOut(annIds.annId(LayoutLabel.LINE, b, e), blockIds(bi), b, e, lr.words.length)
+            lineBoxesBuf += lr.box
+            li += 1
+          }
         }
       }
       bi += 1
     }
     // unassigned words (no parent above threshold) stay residual
-    for (wi <- allWords.indices if orderedWords(wi) == null) {
+    val residual = Array.range(0, nWords).filter(parentOf(_) == -1)
+    for (wi <- residual) {
       val w = allWords(wi)
       orderedWords(wi) = Word(wordIds(wi), w.text, w.begin, w.end, w.box, "", -1, -1,
         tokenClassOf(w.text))
     }
     // ---- residual words → synthetic LINE blocks (TextOrderService
     // include_residual_text_container, pipe/order.py:737-748) ----
-    val residual = allWords.indices.filter(parentOf(_) == -1).toArray
-    final case class ResLine(id: String, box: BBox, members: Array[Int],
-        text: String, begin: Int, end: Int)
     val residualLines: Array[ResLine] =
       if (cfg.includeResidualTextContainer && residual.nonEmpty) {
-        val rboxes = residual.map(allWords(_).box).toIndexedSeq
-        graft.kernels.Lines.createLinesIdx(rboxes, seg.pageWidth, seg.pageHeight,
-          makeSubLines = true, cfg.paragraphBreak).map { lr =>
-          val members = lr.childIdx.map(residual(_)).toArray
-          val b = members.map(allWords(_).begin).min
-          val e = members.map(allWords(_).end).max
+        lineRes.clear()
+        Lines.linesOf(childBoxes, residual, residual.length,
+          Order.wordLines(childBoxes, residual, residual.length), seg.pageWidth,
+          makeSubLines = true, cfg.paragraphBreak, lineRes)
+        lineRes.map { lr =>
+          val members = lr.words
+          val b = spanBegin(members)
+          val e = spanEnd(members)
           // order words within the synthetic line + assemble its text
-          val triples = Order.groupWordsIntoLinesIdx(members.map(allWords(_).box).toIndexedSeq)
+          val wl = Order.wordLines(childBoxes, members, members.length)
           val lineId = annIds.annId(LayoutLabel.LINE, b, e)
-          val sb = new StringBuilder
-          for ((pos, line, li) <- triples) {
-            val wi = members(li)
-            val w = allWords(wi)
-            orderedWords(wi) = Word(wordIds(wi), w.text, w.begin, w.end, w.box,
-              lineId, pos, line, tokenClassOf(w.text))
-            if (sb.nonEmpty) sb.append(' ')
-            sb.append(w.text)
-          }
-          ResLine(lineId, lr.box, members, sb.toString, b, e)
+          ResLine(lineId, lr.box, members, placeWords(members, wl, lineId), b, e)
         }.toArray
       } else Array.empty[ResLine]
-    if (residualLines.nonEmpty) {
-      linesBuf ++= residualLines.map(rl =>
-        LineOut(rl.id, "", rl.begin, rl.end, rl.members.length))
-      lineBoxesBuf ++= residualLines.map(_.box)
+    for (rl <- residualLines) {
+      linesBuf += LineOut(rl.id, "", rl.begin, rl.end, rl.members.length)
+      lineBoxesBuf += rl.box
     }
     // ---- line matcher (USE_LINE_MATCHER, factory.py:1787): LINE
     // annotations parented onto list-family blocks via the SAME
@@ -279,19 +311,19 @@ object Extract {
     // ---- main-content classification + block-level reading order
     // (TextOrderService level (b): order_blocks over floating blocks +
     // residual lines, pipe/order.py:201/:752) ----
-    val keptIdx = blocks0.indices.filter(i => Segment.isMainContent(blocks0(i), cfg.maxLinkDensity))
-    val orderCandidates =
-      keptIdx.map(i => ("b" + i, blocks0(i).box)) ++
-        residualLines.zipWithIndex.map { case (rl, j) => ("l" + j, rl.box) }
-    val orderPairs = Order.orderBlocks(
-      orderCandidates,
+    val keptIdx = Array.range(0, nBlocks).filter(i => Segment.isMainContent(blocks0(i), cfg.maxLinkDensity))
+    val candidateBoxes = keptIdx.map(blocks0(_).box) ++ residualLines.map(_.box)
+    val ordered = Order.readingOrder(ArraySeq.unsafeWrapArray(candidateBoxes),
       seg.pageWidth, seg.pageHeight,
-      cfg.startingPointTolerance, cfg.brokenLineTolerance, cfg.heightTolerance
-    )
-    val readingOrder: Map[Int, Int] =
-      orderPairs.collect { case (ord, key) if key.startsWith("b") => key.drop(1).toInt -> ord }.toMap
-    val lineOrder: Map[Int, Int] =
-      orderPairs.collect { case (ord, key) if key.startsWith("l") => key.drop(1).toInt -> ord }.toMap
+      cfg.startingPointTolerance, cfg.brokenLineTolerance, cfg.heightTolerance)
+    // 1-based reading order per block / residual line, -1 when unread
+    val blockOrder = Array.fill(nBlocks)(-1)
+    val lineOrder = Array.fill(residualLines.length)(-1)
+    for (j <- ordered.indices) {
+      val c = ordered(j)
+      if (c < keptIdx.length) blockOrder(keptIdx(c)) = j + 1
+      else lineOrder(c - keptIdx.length) = j + 1
+    }
 
     // ---- layout-link (factory.py USE_LAYOUT_LINK): nearest-parent
     // links for configured kinds, e.g. caption → figure/table ----
@@ -308,17 +340,19 @@ object Extract {
           .map { case (c, p) => cIdx(c) -> pIdx(p) }.toMap
       }
 
-    val blocks = (blocks0.indices.map { i =>
+    val blocks = new Array[Block](nBlocks + residualLines.length)
+    for (i <- 0 until nBlocks) {
       val b = blocks0(i)
-      Block(blockIds(i), b.kind, b.begin, b.end, b.box, 1.0,
-        readingOrder.getOrElse(i, -1), kept = readingOrder.contains(i),
+      blocks(i) = Block(blockIds(i), b.kind, b.begin, b.end, b.box, 1.0,
+        blockOrder(i), kept = blockOrder(i) > 0,
         b.textDensity, b.linkDensity, b.tagDepth, blockTexts(i),
         linkedBlockId = layoutLink.get(i).map(blockIds(_)).getOrElse(""))
-    } ++ residualLines.zipWithIndex.map { case (rl, j) =>
-      Block(rl.id, LayoutLabel.LINE, rl.begin, rl.end, rl.box, 1.0,
-        lineOrder.getOrElse(j, -1), kept = lineOrder.contains(j),
-        0.0, 0.0, 0, rl.text)
-    }).toArray
+    }
+    for (j <- residualLines.indices) {
+      val rl = residualLines(j)
+      blocks(nBlocks + j) = Block(rl.id, LayoutLabel.LINE, rl.begin, rl.end, rl.box, 1.0,
+        lineOrder(j), kept = lineOrder(j) > 0, 0.0, 0.0, 0, rl.text)
+    }
 
     // ---- table reconstruction (TableSegmentationService analogue,
     // pipe/segment.py:840) — only when markup contains a table ----
@@ -333,8 +367,12 @@ object Extract {
       } else Array.empty[TableData]
 
     // ---- projection (`Page.text` analogue, view.py:1318-1336):
-    // kept blocks by reading order, '\n'-joined ----
-    val extractedText = blocks.filter(_.kept).sortBy(_.readingOrder).map(_.text).mkString("\n")
+    // kept blocks by reading order, '\n'-joined; the kept blocks hold
+    // the orders 1..ordered.length, each once ----
+    val textByOrder = new Array[String](ordered.length)
+    var textLen = ordered.length
+    for (b <- blocks) if (b.kept) { textByOrder(b.readingOrder - 1) = b.text; textLen += b.text.length }
+    val extractedText = textByOrder.addString(new StringBuilder(textLen), "\n").result()
 
     // tool payload (JSON) values — extracted alongside, not instead of,
     // the text payload (north star: "text/tool payload is tokenized")
@@ -343,7 +381,7 @@ object Extract {
         graft.kernels.Json.toolText(t.tool)
       else ""
 
-    val kept = blocks.count(_.kept)
+    val kept = ordered.length
     ExtractedTurn(t.conv_id, t.turn_idx, turnId, t.role, t.ts, extractedText, toolText,
       graft.operators.TextStats.langIdScala(extractedText),
       // LMSequenceClassifierService slot: page-level class over the

@@ -42,7 +42,7 @@ object BenchQueries {
     // a failed sample must NOT contribute a (typically fast)
     // elapsed-until-crash reading to the median — it poisons the JSON
     // line that before/after comparisons are built from; NaN marks it
-    // and any query with a failed sample is excluded from the output
+    // and any query with a failed sample is excluded from the timings
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       try { runOnce(name); (System.nanoTime() - t0) / 1e9 }
@@ -62,11 +62,14 @@ object BenchQueries {
       System.err.println(s"[benchq] $name samples=${ts.map(fmt).mkString(",")}")
       name -> (if (ts.exists(_.isNaN)) Double.NaN else ts.sorted.apply(ts.length / 2))
     }
-    val ok = results.filterNot(_._2.isNaN)
-    results.foreach { case (k, v) =>
-      if (v.isNaN) System.err.println(s"[benchq] $k EXCLUDED from JSON (failed sample)") }
+    val (failed, ok) = results.partition(_._2.isNaN)
+    failed.foreach { case (k, _) =>
+      System.err.println(s"[benchq] $k EXCLUDED from the timings (failed sample)") }
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"benchq","queries":$qs,"total_query_sec":${fmt(ok.map(_._2).sum)},"sf":"$sfDir","samples":$samples}""")
+    // the excluded names ride the JSON too, so a total over fewer
+    // queries cannot pass for a total over all of them
+    val excluded = failed.map { case (k, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    println(s"""{"metric":"benchq","queries":$qs,"excluded":$excluded,"total_query_sec":${fmt(ok.map(_._2).sum)},"sf":"$sfDir","samples":$samples}""")
     spark.stop()
   }
 }

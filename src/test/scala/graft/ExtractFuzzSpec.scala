@@ -7,9 +7,9 @@ import graft.pipeline.Extract
 import graft.kernels.{Json, Segment, Table, Teds}
 
 /** Hostile-payload robustness for the TEXT extraction path — the twin
-  * of PdfFuzzSpec. `extractTurn`'s Try quarantine catches NonFatal,
-  * but a StackOverflowError is FATAL and escapes it, killing the
-  * executor — so every parser on the per-turn path must be iterative
+  * of PdfFuzzSpec. `extractTurn` quarantines a row on any NonFatal
+  * error or StackOverflowError, but a quarantined row is lost output
+  * — so every parser on the per-turn path must be iterative
   * (or depth-bounded) under adversarial nesting: million-deep tag
   * nesting, million-deep JSON brackets, unclosed-tag floods, entity
   * floods, and deterministic random mutations of well-formed
@@ -27,6 +27,19 @@ class ExtractFuzzSpec extends AnyFunSuite {
       case e: Throwable =>
         fail(s"$label threw ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
     }
+
+  test("a StackOverflowError inside the kernel quarantines the row, not the task") {
+    val cfg = graft.pipeline.ExtractConfig(
+      tokenClassifier = Some(_ => throw new StackOverflowError("hostile row")))
+    var et: graft.model.ExtractedTurn = null
+    noThrow("extractTurn overflowing classifier") {
+      et = Extract.extractTurn(turn("<p>hello world</p>"), cfg)
+    }
+    assert(et.metrics.parseFailed)
+    assert(et.conv_id == "conv-fuzz" && et.extractedText == "" && et.words.isEmpty)
+    // the same turn without the hostile classifier extracts normally
+    assert(!Extract.extractTurn(turn("<p>hello world</p>")).metrics.parseFailed)
+  }
 
   test("million-deep nested block tags neither throw nor overflow the stack") {
     val deep = "<div>" * 1000000

@@ -1,37 +1,44 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
+import graft.tools.MakeGolden
 
 /** Golden-file regression gate (reference strategy: canonical Page-JSON
   * assets, SURVEY §5 item 4): full extraction output for the first 3
   * turns of every conversation at sf0.001, committed as jsonl. Any
   * semantic drift in segmentation / ordering / classification /
-  * metrics / ids fails this diff.
+  * metrics / ids fails this diff. `golden_turns.jsonl` pins the blocks,
+  * `golden_words_lines.jsonl` every word, line and table of the same
+  * rows (both written by [[graft.tools.MakeGolden]]).
   */
 class GoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("extraction output matches the committed golden file") {
-    import spark.implicits._
-    val actual = graft.pipeline.Extract.run(graft.sources.Turns.synth(spark, TestSpark.sfDir))
-      .filter($"turn_idx" < 3)
-      .select($"conv_id", $"turn_idx", $"turn_id", $"lang", $"extractedText",
-        $"metrics.blocksKept".as("blocks_kept"),
-        $"metrics.wordCount".as("word_count"),
-        to_json($"blocks").as("blocks_json"))
-      .orderBy("conv_id", "turn_idx")
-      .toJSON.collect()
-
-    val goldenUrl = getClass.getResource("/golden_turns.jsonl")
-    assert(goldenUrl != null, "golden_turns.jsonl missing from test resources")
+  private def assertGolden(actual: Array[String], file: String): Unit = {
+    val goldenUrl = getClass.getResource("/" + file)
+    assert(goldenUrl != null, s"$file missing from test resources")
     val golden = scala.io.Source.fromURL(goldenUrl, "UTF-8").getLines().toArray
 
     assert(actual.length == golden.length,
       s"row count drift: ${actual.length} vs golden ${golden.length}")
     val diffs = actual.zip(golden).zipWithIndex.collect {
-      case ((a, g), i) if a != g => s"row $i:\n  actual: ${a.take(200)}\n  golden: ${g.take(200)}"
+      case ((a, g), i) if a != g =>
+        val at = a.zip(g).indexWhere { case (x, y) => x != y } match {
+          case -1 => math.min(a.length, g.length)
+          case k => k
+        }
+        val from = math.max(0, at - 80)
+        s"row $i differs at char $at:\n  actual: ${a.slice(from, at + 120)}\n" +
+          s"  golden: ${g.slice(from, at + 120)}"
     }
     assert(diffs.isEmpty, diffs.take(3).mkString("\n"))
+  }
+
+  test("extraction output matches the committed golden file") {
+    assertGolden(MakeGolden.blocksRows(spark, TestSpark.sfDir), MakeGolden.BlocksFile)
+  }
+
+  test("words, lines and tables match the committed golden file") {
+    assertGolden(MakeGolden.wordsLinesRows(spark, TestSpark.sfDir), MakeGolden.WordsLinesFile)
   }
 }

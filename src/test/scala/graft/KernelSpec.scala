@@ -72,6 +72,37 @@ class GeometrySpec extends AnyFunSuite {
     assert(Geometry.pyRound2(2.5) == 2.5)
     assert(Geometry.pyRound2(-2.675) == -2.67)
   }
+  test("pyRound2 is bit-identical to the exact BigDecimal rounding") {
+    import java.lang.Double.doubleToRawLongBits
+    def exact(x: Double): Double =
+      new java.math.BigDecimal(x).setScale(2, java.math.RoundingMode.HALF_EVEN).doubleValue()
+    def same(x: Double): Unit =
+      assert(doubleToRawLongBits(Geometry.pyRound2(x)) == doubleToRawLongBits(exact(x)),
+        s"x=$x (${Geometry.pyRound2(x)} vs ${exact(x)})")
+    val rnd = new scala.util.Random(20261018)
+    // random doubles over 16 decades, both signs
+    for (_ <- 1 to 200000)
+      same((rnd.nextDouble() * 2 - 1) * math.pow(10, rnd.nextInt(16) - 8))
+    // decimal .x5 ties (never exact in binary) and their neighbours,
+    // from ulps up to just past the fast path's 1e-6 guard band
+    for (k <- -200000 to 200000 by 13) {
+      val t = k / 100.0 + 0.005
+      same(t); same(math.nextUp(t)); same(math.nextDown(t))
+      for (d <- Seq(1e-12, 1e-10, 1e-9, 1e-8, 9e-9, 1.1e-8)) { same(t + d); same(t - d) }
+    }
+    // exact binary ties (y = x·100 lands on .5): eighths and friends
+    for (n <- -8000 to 8000) { same(n / 8.0); same(n / 40.0); same(n / 200.0) }
+    // zeros, values that round to zero, tiny and huge magnitudes, and
+    // the edge of the fast path at |x·100| = 1e9
+    for (x <- Seq(0.0, -0.0, -0.001, 0.001, -0.004999, -0.005, -0.0050001,
+        Double.MinPositiveValue, -Double.MinPositiveValue, 1e-300, -1e-300,
+        1e7, -1e7, math.nextDown(1e7), math.nextUp(-1e7), 9999999.995, 1e15, -1e300,
+        Double.MaxValue, -Double.MaxValue))
+      same(x)
+    // not representable: both routes refuse
+    assertThrows[NumberFormatException](Geometry.pyRound2(Double.NaN))
+    assertThrows[NumberFormatException](Geometry.pyRound2(Double.PositiveInfinity))
+  }
 }
 
 class OrderSpec extends AnyFunSuite {
@@ -154,6 +185,67 @@ class OrderSpec extends AnyFunSuite {
       ("X", BBox(50, 700, 950, 850, absCoords = true)))
     val res = Order.orderBlocks(anns, 1000, 1000)
     assert(res == Seq((1, "X"), (2, "A"), (3, "X")), res.toString)
+  }
+  test("singleRow equals a one-row group_words_into_lines on random boxes of mixed heights") {
+    val rnd = new scala.util.Random(20261019)
+    var single = 0
+    for (_ <- 1 to 20000) {
+      val n = 1 + rnd.nextInt(8)
+      val boxes = IndexedSeq.fill(n) {
+        val uly = rnd.nextInt(40); val h = 4 + rnd.nextInt(50); val ulx = rnd.nextInt(500)
+        BBox(ulx, uly, ulx + 10 + rnd.nextInt(60), uly + h, absCoords = true)
+      }
+      val oneRow = Order.groupWordsIntoLinesIdx(boxes).map(_._2).distinct.size == 1
+      if (oneRow) single += 1
+      assert(Order.singleRow(boxes, Array.range(0, n), n) == oneRow, boxes.toString)
+    }
+    // both outcomes are exercised, not just the trivial one
+    assert(single > 2000 && single < 18000, s"$single one-row cases")
+  }
+  test("connectedComponents: round-once equals the reference's round-all-per-insertion loop") {
+    import scala.collection.mutable.ArrayBuffer
+    // order.py:164-198 literally: after every insertion, round every
+    // column of every component and re-sort all of them
+    def literal(columns: IndexedSeq[Order.MBox]): List[Int] = {
+      final class Comp(var top: Double, var bottom: Double, val cols: ArrayBuffer[(Int, Order.MBox)])
+      val comps = ArrayBuffer.empty[Comp]
+      for ((col, idx) <- columns.zipWithIndex) {
+        val hit = comps.find(comp =>
+          (comp.top < col.uly && col.uly < comp.bottom) ||
+          (comp.top < col.lry && col.lry < comp.bottom) ||
+          (col.uly < comp.top && comp.top < col.lry) ||
+          (col.uly < comp.bottom && comp.bottom < col.lry))
+        hit match {
+          case Some(comp) =>
+            comp.top = math.min(comp.top, col.uly)
+            comp.bottom = math.max(comp.bottom, col.lry)
+            comp.cols += ((idx, col))
+          case None => comps += new Comp(col.uly, col.lry, ArrayBuffer((idx, col)))
+        }
+        for (comp <- comps) {
+          for ((_, b) <- comp.cols) { b.ulx = Geometry.pyRound2(b.ulx); b.uly = Geometry.pyRound2(b.uly) }
+          val sorted = comp.cols.sortBy { case (_, b) => (b.ulx, b.uly) }
+          comp.cols.clear(); comp.cols ++= sorted
+        }
+        val sorted = comps.sortBy(_.top)
+        comps.clear(); comps ++= sorted
+      }
+      comps.toList.flatMap(_.cols.map(_._1))
+    }
+    val rnd = new scala.util.Random(20261020)
+    // coarse grids plus sub-cent noise: rounding creates key ties
+    def coord(): Double = rnd.nextInt(8) / 8.0 + rnd.nextInt(7) * 0.0013
+    for (round <- 1 to 3000) {
+      val spec = IndexedSeq.fill(1 + rnd.nextInt(9)) {
+        val ulx = coord(); val uly = coord()
+        (ulx, uly, ulx + 0.05 + rnd.nextDouble() * 0.3, uly + 0.01 + rnd.nextDouble() * 0.3)
+      }
+      def boxes = spec.map { case (a, b, c, d) => new Order.MBox(a, b, c, d) }
+      val (mine, ref) = (boxes, boxes)
+      val got = Order.connectedComponents(mine).toList
+      assert(got == literal(ref), s"round $round: $spec")
+      assert(mine.map(b => (b.ulx, b.uly, b.lrx, b.lry)) == ref.map(b => (b.ulx, b.uly, b.lrx, b.lry)))
+    }
   }
 }
 
