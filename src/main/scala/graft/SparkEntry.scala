@@ -1180,9 +1180,9 @@ object SparkEntry {
     // Bloom path.
     "q_dedup_incremental" -> ((s, dir) => {
       val d = docs(s, dir)
-      Dedup.incrementalDedup(d.select("doc_id", "text"),
+      Dedup.incrementalDedupWithHandles(d.select("doc_id", "text"),
           d.filter(col("doc_id") % 2 === 0).select("text"),
-          "doc_id", "text", fpp = 0.2)
+          "doc_id", "text", fpp = 0.2)._1
         .select("doc_id", "is_dup")
     }),
 
@@ -1236,7 +1236,7 @@ object SparkEntry {
       val d = docs(s, dir).filter(col("doc_id") < 200).select("doc_id", "text")
       val all = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
       val pairs = Dedup.minhashLshExactPairs(all, "doc_id", "text")
-      Dedup.components(all.select(col("doc_id").as("id")), pairs)
+      Dedup.componentsWithRounds(all.select(col("doc_id").as("id")), pairs)._1
     }),
     // the O(log² n) large-star/small-star alternative over the SAME
     // pair graph — adversarial-diameter-safe; must agree with the
@@ -1245,7 +1245,7 @@ object SparkEntry {
       val d = docs(s, dir).filter(col("doc_id") < 200).select("doc_id", "text")
       val all = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
       val pairs = Dedup.minhashLshExactPairs(all, "doc_id", "text")
-      Dedup.componentsLargeSmallStar(all.select(col("doc_id").as("id")), pairs)
+      Dedup.componentsLargeSmallStarWithRounds(all.select(col("doc_id").as("id")), pairs)._1
     }),
     "q_dedup_ngram" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(docs(s, dir).filter(col("doc_id") < 150), "doc_id", "text")

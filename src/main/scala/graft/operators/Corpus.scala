@@ -320,7 +320,7 @@ object Corpus {
     val model = spark.createDataFrame(modelRows.toSeq).toDF("w", "mc")
     // localCheckpoint: perDoc feeds BOTH the histogram collect and the
     // final join — materialize the explode/join/aggregate exchange once
-    // instead of repeating it (the Dedup.components precedent).
+    // instead of repeating it (the Dedup.componentsWithRounds precedent).
     val perDoc = docs
       .select(col(idCol).cast("long").as("doc_id"),
         explode(split(col(textCol), " ")).as("w"))

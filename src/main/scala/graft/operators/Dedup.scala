@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline.
@@ -58,9 +58,15 @@ object Dedup {
     * (XXH64 seed 42), then re-seeded per signature slot with a cheap
     * avalanche mix — O(shingles + numHashes·shingles-long-mixes)
     * instead of the Column-space O(numHashes × full-shingle-recompute).
+    * Null text signs as empty text.
     */
-  def minhashSig(text: String, k: Int, numHashes: Int): Array[Long] = {
-    val sh = shinglesOf(if (text == null) "" else text, k)
+  def minhashSig(text: String, k: Int, numHashes: Int): Array[Long] =
+    shingleSig(shinglesOf(if (text == null) "" else text, k), numHashes)
+
+  /** The [[minhashSig]] kernel over an already-built shingle array, so
+    * a row that needs both its shingles and its signature builds the
+    * shingles once. */
+  private def shingleSig(sh: Array[String], numHashes: Int): Array[Long] = {
     val base = sh.map(s => XxHash.hashUtf8(s, 42L))
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
@@ -87,7 +93,8 @@ object Dedup {
     df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        (id, minhashSig(t, k, numHashes), shinglesOf(if (t == null) "" else t, k))
+        val sh = shinglesOf(if (t == null) "" else t, k)
+        (id, shingleSig(sh, numHashes), sh)
       })
       .toDF("id", "sig", "sh")
   }
@@ -128,25 +135,10 @@ object Dedup {
       if (persistSigs) sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sigs0
 
-    // the band self-join shuffles (band, hash, id) ONLY — carrying the
-    // 64-element signatures through the join and the distinct
-    // multiplies the exchange bytes ~6× and capsizes the disk at
-    // 10⁷-doc scale (measured: 18 M docs overflowed a 65 GB spill
-    // volume before this split); candidates re-acquire signatures by
-    // two id-keyed hash joins AFTER the distinct collapses band
-    // multiplicity
-    val banded = bandKeys(sigs, numHashes, bands)
-
-    val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-
+    val cand = sigAgreement(bandCandidates(bandKeys(sigs, numHashes, bands)),
+      "id_a", sigs, "id_b", sigs)
     val pairs = cand.select(col("id_a"), col("id_b"),
-        (sigAgreeUdf(col("sig_a"), col("sig_b")).cast("double") / numHashes).as("jaccard_est"))
+        (col("agree").cast("double") / numHashes).as("jaccard_est"))
       .filter(col("jaccard_est") >= jaccardThreshold)
       .orderBy("id_a", "id_b")
     (pairs, sigs)
@@ -164,7 +156,7 @@ object Dedup {
     */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame =
-    bandCandidates(signatures(df, idCol, textCol, k, numHashes), numHashes, bands)
+    bandCandidates(bandKeys(signatures(df, idCol, textCol, k, numHashes), numHashes, bands))
 
   /** `(id, band, band_hash)` rows of a signature frame — THE banding
     * expression (xxhash64 over each band's signature slice, seeded by
@@ -180,13 +172,32 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
 
-  private def bandCandidates(withSig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val banded = bandKeys(withSig, numHashes, bands)
+  /** THE band self-join of the LSH family: `(id, band, band_hash)`
+    * rows → distinct `(id_a, id_b)` pairs, `id_a < id_b`, that share a
+    * bucket in some band. It shuffles (band, hash, id) ONLY — carrying
+    * 64-element signatures through the join and the distinct multiplies
+    * the exchange bytes ~6× and capsizes the disk at 10⁷-doc scale
+    * (measured: 18 M docs overflowed a 65 GB spill volume before this
+    * split); verification re-acquires payloads by id-keyed joins AFTER
+    * the distinct collapses band multiplicity.
+    */
+  private def bandCandidates(banded: DataFrame): DataFrame =
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-  }
+
+  /** `cand` with each side's signature re-joined by id — `idA` from
+    * `sigsA`, `idB` from `sigsB`, both `(id, sig)` frames — and their
+    * agreeing slot count as `agree`: the verify step of every
+    * signature-agreement consumer.
+    */
+  private def sigAgreement(cand: DataFrame, idA: String, sigsA: DataFrame,
+      idB: String, sigsB: DataFrame): DataFrame =
+    cand
+      .join(sigsA.select(col("id").as(idA), col("sig").as("sig_a")), Seq(idA))
+      .join(sigsB.select(col("id").as(idB), col("sig").as("sig_b")), Seq(idB))
+      .withColumn("agree", sigAgreeUdf(col("sig_a"), col("sig_b")))
 
   /** MinHash-LSH candidates verified with EXACT shingle Jaccard: the
     * production near-dup shape — LSH prunes the pair space, then only
@@ -200,7 +211,7 @@ object Dedup {
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       jaccardThreshold: Double = 0.95): DataFrame = {
     val withSh = signatures(df, idCol, textCol, k, numHashes)
-    val cand = bandCandidates(withSh, numHashes, bands)
+    val cand = bandCandidates(bandKeys(withSh, numHashes, bands))
 
     // The exact shingle-set verify is the expensive stage: Spark
     // evaluates array_intersect on string arrays interpreted (per-pair
@@ -235,11 +246,8 @@ object Dedup {
     val sigs = withSh.select(col("id"), col("sig"))
     val prefiltered =
       if (jaccardThreshold >= 0.93 && numHashes >= 64)
-        cand
-          .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-          .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-          .filter(sigAgreeUdf(col("sig_a"), col("sig_b")) >=
-            lit(((jaccardThreshold - 0.25) * numHashes).ceil.toInt))
+        sigAgreement(cand, "id_a", sigs, "id_b", sigs)
+          .filter(col("agree") >= lit(((jaccardThreshold - 0.25) * numHashes).ceil.toInt))
           .select("id_a", "id_b")
       else cand
     val shingled = withSh.select(col("id"), col("sh"))
@@ -252,8 +260,6 @@ object Dedup {
       .filter(col("jaccard") >= jaccardThreshold)
       .orderBy("id_a", "id_b")
   }
-
-  private val labelSumSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Count of agreeing MinHash slots between two signatures — the
     * value `aggregate(zip_with(a, b, equal), 0, +)` computes, as one
@@ -323,14 +329,6 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** SimHash-blocked EXACT duplicate-bag pairs: 4 × 16-bit simhash
-    * bands prune the pair space (equal token multiset ⇒ equal simhash
-    * ⇒ all four bands collide, so the blocking is lossless for this
-    * predicate), then candidates are verified by exact token-multiset
-    * equality. This is the oracle-able member of the SimHash family —
-    * the hamming-≤h variant ([[simhashPairs]]) depends on the hash
-    * function itself and is brute-force-verified in DedupSpec instead.
-    */
   /** Canonical token-bag fingerprint: XXH64 of the sorted lowercase
     * tokens space-joined (tokens are whitespace-split, so the
     * separator cannot collide). Internal equality key only — never
@@ -344,6 +342,14 @@ object Dedup {
     XxHash.hashUtf8(toks.mkString(" "), 99L)
   }
 
+  /** SimHash-blocked EXACT duplicate-bag pairs: 4 × 16-bit simhash
+    * bands prune the pair space (equal token multiset ⇒ equal simhash
+    * ⇒ all four bands collide, so the blocking is lossless for this
+    * predicate), then candidates are verified by exact token-multiset
+    * equality. This is the oracle-able member of the SimHash family —
+    * the hamming-≤h variant ([[simhashPairs]]) depends on the hash
+    * function itself and is brute-force-verified in DedupSpec instead.
+    */
   def simhashExactPairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -387,7 +393,8 @@ object Dedup {
     shingleArrUdf(col(textCol), lit(k))
 
   /** PPJoin-style prefix-filtered candidate pairs for exact n-gram
-    * Jaccard (public so DedupRecallSpec can count candidates).
+    * Jaccard (public so `DedupRecallSpec`, in OperatorsSpec.scala, can
+    * count candidates).
     *
     * Canonical order = ascending global document frequency (ties by
     * token) — the rarest shingles land in prefixes, so the prefix
@@ -487,24 +494,19 @@ object Dedup {
     * rewrite, and the probe guards a filter, not the hot aggregation
     * path; the confirm join restores exactness regardless.
     *
-    * @return `(idCol, bloom_hit, is_dup)` per batch row — `bloom_hit`
-    *         probabilistic (spec-tested superset of dups), `is_dup`
-    *         exact (oracle-tested); removal is a join-back filter on
-    *         the id downstream. Null text is definitively new.
-    */
-  def incrementalDedup(batch: DataFrame, history: DataFrame, idCol: String,
-      textCol: String, fpp: Double = 0.03): DataFrame =
-    incrementalDedupWithHandles(batch, history, idCol, textCol, fpp)._1
-
-  /** [[incrementalDedup]] plus the frames it PERSISTED, so a standing
-    * caller can release them (the minhashLshPairsWithSigs precedent):
-    * Spark's CacheManager holds cached plans until an explicit
-    * unpersist, so a long-running loop that calls the no-handle
-    * variant per micro-batch accumulates two cached frames per batch —
-    * one of them the full (growing) history key set. Unpersist the
-    * handles as soon as the returned flags have materialized
-    * downstream; one-shot callers can keep using [[incrementalDedup]]
-    * (its caches release when the session's plans go out of scope).
+    * @return `(flags, handles)`: `flags` is `(idCol, bloom_hit,
+    *         is_dup)` per batch row — `bloom_hit` probabilistic
+    *         (spec-tested superset of dups), `is_dup` exact
+    *         (oracle-tested); removal is a join-back filter on the id
+    *         downstream. Null text is definitively new. `handles` are
+    *         the frames this call PERSISTED (the minhashLshPairsWithSigs
+    *         precedent): Spark's CacheManager holds cached plans until
+    *         an explicit unpersist, so a standing loop that drops them
+    *         accumulates two cached frames per micro-batch — one of
+    *         them the full (growing) history key set. Unpersist them
+    *         once the flags have materialized downstream; a one-shot
+    *         caller may take `._1` and let the caches release when the
+    *         session's plans go out of scope.
     */
   def incrementalDedupWithHandles(batch: DataFrame, history: DataFrame,
       idCol: String, textCol: String, fpp: Double = 0.03)
@@ -552,7 +554,7 @@ object Dedup {
   }
 
   /** Incremental NEAR-duplicate detection vs an ingested history — the
-    * fuzzy sibling of [[incrementalDedup]] (which answers only exact
+    * fuzzy sibling of [[incrementalDedupWithHandles]] (which answers only exact
     * byte-identity). Each batch document is flagged when its MinHash
     * signature agrees with some history document's on ≥
     * `jaccardThreshold` of the hash functions, found through the
@@ -582,8 +584,6 @@ object Dedup {
         .select(col("band"), col("band_hash"), col("id").as("hist_id")),
         Seq("band", "band_hash"))
       .select("batch_id", "hist_id").distinct()
-      .join(batchSigs.select(col("id").as("batch_id"), col("sig").as("sig_a")), Seq("batch_id"))
-      .join(histSigs.select(col("id").as("hist_id"), col("sig").as("sig_b")), Seq("hist_id"))
     // best match per batch doc: max agreement, ties to the LOWEST
     // history id — struct max with the BITWISE-COMPLEMENTED id makes
     // it one map-side-combinable aggregation (the canonicalFromLabels
@@ -591,9 +591,9 @@ object Dedup {
     // overflow edge — arithmetic negation maps Long.MinValue to itself
     // (the budgetPrefix comment's forbidden edge), the complement does
     // not, and ~(~x) == x recovers the id exactly.
-    val nearest = cand
+    val nearest = sigAgreement(cand, "batch_id", batchSigs, "hist_id", histSigs)
       .select(col("batch_id"), col("hist_id"),
-        (sigAgreeUdf(col("sig_a"), col("sig_b")).cast("double") / numHashes).as("est"))
+        (col("agree").cast("double") / numHashes).as("est"))
       .filter(col("est") >= jaccardThreshold)
       .groupBy("batch_id")
       .agg(max(struct(col("est"), bitwise_not(col("hist_id")).as("neg_id"))).as("w"))
@@ -604,25 +604,6 @@ object Dedup {
         col("hist_id").isNotNull.as("is_neardup"), col("hist_id"))
   }
 
-  /** Connected components over a near-dup pair graph → one canonical
-    * keeper per cluster: the step a production dedup pipeline runs
-    * AFTER pair generation (pairs alone don't dedupe transitive
-    * chains A≈B≈C). Iterative min-label propagation — labels start as
-    * the node id, each round every node takes the min label among
-    * itself and its neighbors; converges in O(graph diameter) rounds,
-    * each round one shuffle of (edge, label). Near-dup clusters are
-    * shallow (duplicates of a common source), so the loop exits after
-    * 2-3 rounds in practice; `maxIter` bounds adversarial chains.
-    * Verified against a DuckDB WITH RECURSIVE transitive-closure
-    * oracle (`q_dedup_components`).
-    *
-    * @param nodes (id) — every document, including singletons
-    * @param pairs (id_a, id_b) near-dup pairs
-    * @return (id, component) with component = min id in the cluster
-    */
-  def components(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    componentsWithRounds(nodes, pairs, maxIter)._1
-
   /** Near-dup SURVIVOR selection — the step a dedup pipeline runs after
     * cluster resolution: per connected component keep exactly one
     * canonical document, the argmax by (weight DESC, id ASC) (weight =
@@ -630,8 +611,9 @@ object Dedup {
     * recency). Emits one row per input document — `(id, label, weight,
     * is_canonical)` — so removal is a filter, not a join, downstream.
     *
-    * Scale shape: [[components]] does the heavy lifting; the argmax is
-    * aggregations + a join-back, NEVER a window partitioned by label.
+    * Scale shape: [[componentsWithRounds]] does the heavy lifting; the
+    * argmax is aggregations + a join-back, NEVER a window partitioned
+    * by label.
     * A window partition is one task: one giant near-dup cluster —
     * exactly what web boilerplate produces at 100 TB — would serialize
     * its whole cluster into a single sort task. `groupBy(label)`
@@ -652,7 +634,7 @@ object Dedup {
   def canonicalSurvivors(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int = 20): DataFrame =
     canonicalFromLabels(
-      components(nodes.select("id"), pairs, maxIter)
+      componentsWithRounds(nodes.select("id"), pairs, maxIter)._1
         .join(nodes.select(col("id").cast("long").as("id"), col("weight")), Seq("id")))
 
   /** The argmax stage alone, over an ALREADY-LABELED frame
@@ -670,8 +652,60 @@ object Dedup {
       .select("id", "label", "weight", "is_canonical")
   }
 
-  /** [[components]] plus the number of propagation rounds taken —
-    * Bench measures round growth on adversarial chain graphs.
+  private val observeSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** `df` materialized by `localCheckpoint(true)`, plus one aggregate
+    * over its rows observed during that same job — the step both
+    * component loops take once per round. `observe()` fills the metric
+    * from the checkpoint's own tasks, so the loops learn a count or a
+    * sum without a second job over the checkpointed frame; the scan
+    * runs only on an execution path that skips the metric.
+    *
+    * localCheckpoint(true) instead of persist()+count(): same eager
+    * materialization + lineage truncation, but the materialization
+    * runs through AQE, which COALESCES a shuffle's output before
+    * storing — a persisted plan is pinned at the configured shuffle
+    * width (AQE leaves cached partitioning alone by default), so every
+    * later read would schedule one task per configured partition over
+    * a near-empty cache. Dataset exposes no unpersist for the
+    * checkpointed RDD blocks: the ContextCleaner reclaims them once the
+    * frame is unreachable, so a loop that reassigns its `var` holds
+    * only the current round's blocks.
+    */
+  private def checkpointObserved(df: DataFrame, agg: Column): (DataFrame, Row) = {
+    val name = s"__graft_dedup_observed_${observeSeq.incrementAndGet()}"
+    val withObs = df.observe(name, agg)
+    val cp = withObs.localCheckpoint(true)
+    (cp, withObs.queryExecution.observedMetrics.getOrElse(name, cp.agg(agg).head()))
+  }
+
+  /** [[checkpointObserved]] with the row count. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val (cp, row) = checkpointObserved(df, count(lit(1)))
+    (cp, row.getLong(0))
+  }
+
+  /** Connected components over a near-dup pair graph → one canonical
+    * keeper per cluster: the step a production dedup pipeline runs
+    * AFTER pair generation (pairs alone don't dedupe transitive
+    * chains A≈B≈C). Iterative min-label propagation — labels start as
+    * the node id, each round every node takes the min label among
+    * itself and its neighbors; converges in O(graph diameter) rounds,
+    * each round one shuffle of (edge, label). Near-dup clusters are
+    * shallow (duplicates of a common source), so the loop exits after
+    * 2-3 rounds in practice; `maxIter` bounds adversarial chains.
+    * Verified against a DuckDB WITH RECURSIVE transitive-closure
+    * oracle (`q_dedup_components`).
+    *
+    * Min-label stays next to [[componentsLargeSmallStarWithRounds]]
+    * because it is the faster of the two on near-dup graphs (measured
+    * in SCALE.md "Components").
+    *
+    * @param nodes (id) — every document, including singletons
+    * @param pairs (id_a, id_b) near-dup pairs
+    * @return `((id, label), rounds)`: label = min id in the cluster;
+    *         rounds = propagation rounds taken, which Bench measures on
+    *         adversarial chain graphs
     */
   def componentsWithRounds(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int = 20): (DataFrame, Int) = {
@@ -681,23 +715,14 @@ object Dedup {
     // constrain edges to the node set once, up front — two joins one
     // time instead of one join per round
     val nodeIds = nodes.select(col("id").cast("long").as("id"))
-    // localCheckpoint(true) instead of persist()+count(): same eager
-    // materialization + lineage truncation, but the materialization
-    // runs through AQE, which COALESCES the distinct's shuffle output
-    // before storing — a persisted plan is pinned at the configured
-    // shuffle width (AQE leaves cached partitioning alone by default),
-    // so every one of the loop's per-round reads was scheduling one
-    // task per configured partition over a near-empty cache. Blocks
-    // are reclaimed by the ContextCleaner when the frame goes out of
-    // scope (the componentsLargeSmallStar lifecycle note).
-    val edges = pairs.select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
-      .unionByName(pairs.select(col("id_b").cast("long").as("a"), col("id_a").cast("long").as("b")))
-      .join(nodeIds.select(col("id").as("a")), "a")
-      .join(nodeIds.select(col("id").as("b")), "b")
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
-    // localCheckpoint per round truncates the lineage — without it the
+    val (edges, edgeCount) = checkpointCounted(
+      pairs.select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
+        .unionByName(pairs.select(col("id_b").cast("long").as("a"), col("id_a").cast("long").as("b")))
+        .join(nodeIds.select(col("id").as("a")), "a")
+        .join(nodeIds.select(col("id").as("b")), "b")
+        .select("a", "b")
+        .distinct())
+    // a checkpoint per round truncates the lineage — without it the
     // plan nests one join+agg level per iteration and Catalyst analysis
     // time grows superlinearly (the classic iterative-DataFrame trap).
     // The seed stays lazy here: it is checkpointed (with its sum
@@ -706,33 +731,19 @@ object Dedup {
     // convergence via the label-sum invariant: min-propagation is
     // MONOTONE (every node's label can only decrease), so the sum of
     // labels strictly decreases until the fixed point — equal sums ⇔
-    // no label changed. One decimal aggregation per round replaces the
-    // join-based changed-count (decimal(38,0) is exact and overflow-
-    // safe up to ~1e38 total, far beyond 1e12 nodes × 2^63 ids).
-    // The aggregation rides the checkpoint materialization itself as
-    // an observe() metric (accumulator-filled during the same job) —
-    // a separate per-round sum job over the checkpointed labels was
-    // pure scheduling overhead; the scan-based fallback covers any
-    // execution path that skips the metric.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-      if (v == null) java.math.BigDecimal.ZERO else v
-    }
-    val obsPrefix = s"__graft_components_sum_${Dedup.labelSumSeq.incrementAndGet()}"
-    def checkpointWithSum(df: DataFrame, round: Int): (DataFrame, java.math.BigDecimal) = {
-      val name = s"${obsPrefix}_$round"
-      val withObs = df.observe(name, sum(col("label").cast("decimal(38,0)")))
-      val cp = withObs.localCheckpoint(true)
-      val observed = withObs.queryExecution.observedMetrics.get(name)
-        .map(r => Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
-      (cp, observed.getOrElse(labelSum(cp)))
+    // no label changed. One decimal aggregation per round, observed on
+    // the round's checkpoint, replaces a join-based changed-count
+    // (decimal(38,0) is exact and overflow-safe up to ~1e38 total, far
+    // beyond 1e12 nodes × 2^63 ids).
+    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val (cp, row) = checkpointObserved(df, sum(col("label").cast("decimal(38,0)")))
+      (cp, Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
     }
     var iter = 0
-    var converged = edges.isEmpty
+    var converged = edgeCount == 0L
     var prevSum = java.math.BigDecimal.ZERO
     if (!converged) {
-      val (seeded, seedSum) = checkpointWithSum(
-        nodes.select(col("id").cast("long").as("id"), col("id").cast("long").as("label")), 0)
+      val (seeded, seedSum) = checkpointWithSum(labels)
       labels = seeded
       prevSum = seedSum
     }
@@ -741,31 +752,29 @@ object Dedup {
         .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
         .select(col("b").as("id"), col("la").as("label"))
       val (next, nextSum) = checkpointWithSum(
-        labels.unionByName(prop).groupBy("id").agg(min("label").as("label")), iter + 1)
+        labels.unionByName(prop).groupBy("id").agg(min("label").as("label")))
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       iter += 1
     }
-    // (edges is localCheckpointed, not persisted — its blocks release
-    // via the ContextCleaner once this frame is unreachable)
     // no silent loss: a cutoff at maxIter would return FRAGMENTED
     // cluster labels that look valid — fail loudly instead (near-dup
     // graphs have shallow diameters; hitting this means the input is
     // not the workload this operator is shaped for)
     require(converged,
-      s"components() did not converge within maxIter=$maxIter rounds; " +
+      s"componentsWithRounds did not converge within maxIter=$maxIter rounds; " +
         "the pair graph has a longer chain diameter than near-dup " +
-        "clusters should — raise maxIter or use componentsLargeSmallStar")
+        "clusters should — raise maxIter or use componentsLargeSmallStarWithRounds")
     (labels.orderBy("id"), iter)
   }
 
   /** Large-star/small-star connected components (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    * remedy [[components]]'s non-convergence guard points at: round
-    * count is O(log² n) on ANY graph (O(log n) in practice) instead of
-    * O(diameter), so adversarial long chains converge where plain
-    * min-label propagation would hit its iteration bound.
+    * remedy [[componentsWithRounds]]'s non-convergence guard points
+    * at: round count is O(log² n) on ANY graph (O(log n) in practice)
+    * instead of O(diameter), so adversarial long chains converge where
+    * plain min-label propagation would hit its iteration bound.
     *
     * Per round, two edge rewrites that preserve connectivity and only
     * ever point edges at smaller ids:
@@ -775,43 +784,16 @@ object Dedup {
     *    neighbors to their minimum
     * At the fixed point the edges form stars (v → component min);
     * convergence is checked with exact set `except`s, not a hash.
-    * Same output contract as [[components]]: (id, component-min) with
-    * singletons labeled themselves. Shape per round: two groupBy-min
-    * shuffles + the convergence check — all on (a, b) long pairs.
-    *
-    * Storage lifecycle: each round's `localCheckpoint(true)` persists
-    * RDD blocks; Dataset exposes no unpersist for them, so superseded
-    * rounds are reclaimed by Spark's ContextCleaner once their `var`
-    * reference is reassigned (the standard iterative-checkpoint
-    * pattern) — peak storage is the current round's ~2 edge sets, not
-    * the sum over rounds.
-    */
-  def componentsLargeSmallStar(nodes: DataFrame, pairs: DataFrame,
-      maxIter: Int = 30): DataFrame =
-    componentsLargeSmallStarWithRounds(nodes, pairs, maxIter)._1
-
-  /** [[componentsLargeSmallStar]] plus rounds taken (see
-    * [[componentsWithRounds]]).
+    * Same output contract as [[componentsWithRounds]]: ((id,
+    * component-min), rounds) with singletons labeled themselves.
+    * Shape per round: two groupBy-min shuffles + the convergence
+    * check — all on (a, b) long pairs. Peak storage is the current
+    * round's ~2 edge sets, not the sum over rounds (the
+    * [[checkpointObserved]] lifecycle).
     */
   def componentsLargeSmallStarWithRounds(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int = 30): (DataFrame, Int) = {
-    // row counts ride the checkpoint materializations as observe()
-    // metrics (the componentsWithRounds label-sum pattern) — separate
-    // count() jobs over the freshly checkpointed frames were pure
-    // scheduling overhead; the scan fallback covers any path that
-    // skips the metric.
-    val obsPrefix = s"__graft_lss_count_${Dedup.labelSumSeq.incrementAndGet()}"
-    var obsRound = 0
-    def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
-      obsRound += 1
-      val name = s"${obsPrefix}_$obsRound"
-      val withObs = df.observe(name, count(lit(1)))
-      val cp = withObs.localCheckpoint(true)
-      val n = withObs.queryExecution.observedMetrics.get(name)
-        .map(_.getLong(0)).getOrElse(cp.count())
-      (cp, n)
-    }
-    var (edges, edgeCount) = checkpointWithCount(pairs.select(
+    var (edges, edgeCount) = checkpointCounted(pairs.select(
         greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("a"),
         least(col("id_a").cast("long"), col("id_b").cast("long")).as("b"))
       .filter(col("a") =!= col("b")).distinct())
@@ -829,7 +811,7 @@ object Dedup {
         .localCheckpoint(true)
       // ---- small-star (edges already point larger → smaller) ----
       val ssMin = large.groupBy("a").agg(min("b").as("m"))
-      val (small, smallCount) = checkpointWithCount(
+      val (small, smallCount) = checkpointCounted(
         large.join(ssMin, "a").filter(col("b") =!= col("m"))
           .select(col("b").as("edge_a"), col("m").as("edge_b"))
           .unionByName(ssMin.select(col("a").as("edge_a"), col("m").as("edge_b")))
@@ -856,6 +838,15 @@ object Dedup {
       .orderBy("id"), iter)
   }
 
+  /** SRP-band collision candidates alone (no cosine verify) — public
+    * for the same Bench scale evidence as [[minhashLshCandidates]].
+    */
+  def embeddingNearDupCandidates(df: DataFrame, idCol: String, vecCol: String,
+      planes: Int = 16, tables: Int = 16): DataFrame =
+    bandCandidates(Similarity.bucketed(df, idCol, vecCol, planes, tables)
+      .select(col("id"), posexplode(col("buckets")))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash"))
+
   /** Embedding near-dup: BANDED sign-bit LSH, cosine-verified pairs.
     *
     * Round-1 required candidates to share ALL 12 sign bits — one band,
@@ -879,20 +870,6 @@ object Dedup {
     * Scale shape: the band join carries (band, bucket, id) only;
     * vectors re-join the candidate pairs by id.
     */
-  /** SRP-band collision candidates alone (no cosine verify) — public
-    * for the same Bench scale evidence as [[minhashLshCandidates]].
-    */
-  def embeddingNearDupCandidates(df: DataFrame, idCol: String, vecCol: String,
-      planes: Int = 16, tables: Int = 16): DataFrame = {
-    val banded = Similarity.bucketed(df, idCol, vecCol, planes, tables)
-      .select(col("id"), posexplode(col("buckets")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-  }
-
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       planes: Int = 16, tables: Int = 16, threshold: Double = 0.9): DataFrame = {
     // unit vectors once per row → candidate verify = one dot product

@@ -26,12 +26,6 @@ final case class ExtractConfig(
       * rule). A fine grain gives the exchange many keys, so even a small
       * table spreads its work evenly over the partitions (SCALE.md). */
     saltChunkSize: Int = 16,
-    /** emit synthetic text lines (disable when the consumer doesn't
-      * read them — saves a second line-grouping pass per block) */
-    emitLines: Boolean = true,
-    /** emit per-word uuid3 ids (disable for id-free consumers — one
-      * MD5 per word otherwise) */
-    emitWordIds: Boolean = true,
     /** reference `include_residual_text_container` (pipe/order.py:737,
       * factory default True): words matched to no block become
       * synthetic LINE blocks that join the floating-text ordering */
@@ -72,14 +66,10 @@ final case class ExtractConfig(
       * pass that parents LINE annotations onto list-family blocks with
       * the SAME WORD_MATCHING knobs (rule/threshold/max_parent_only —
       * the reference reuses them verbatim, :1121-1132). Off by default
-      * (conf_dd_one.yaml:177 `USE_LINE_MATCHER: false`).
+      * (conf_dd_one.yaml:177 `USE_LINE_MATCHER: false`). Its parents are
+      * the LIST_ITEM blocks.
       */
     useLineMatcher: Boolean = false,
-    /** The line matcher's parent categories (reference FamilyCompound
-      * parent `LayoutLabel.LIST`; this renderer's list family is the
-      * per-item block, so LIST_ITEM is the default representative).
-      */
-    lineMatchParents: Set[String] = Set(graft.model.LayoutLabel.LIST_ITEM),
     /** SimpleTransformService analogue (pipe/transform.py:32-96):
       * NFC + newline canonicalization applied to the payload BEFORE
       * segmentation, so every emitted span indexes the normalized
@@ -117,6 +107,12 @@ object Extract {
           TurnMetrics(0, 0, 0, 0, parseFailed = true))
     }
   }
+
+  /** The line matcher's parent category: the reference's FamilyCompound
+    * parent is `LayoutLabel.LIST`, and this renderer's list family is the
+    * per-item block, so LIST_ITEM stands for it.
+    */
+  private val LineMatchParent = LayoutLabel.LIST_ITEM
 
   /** Residual words' synthetic LINE block. */
   private final case class ResLine(id: String, box: BBox, members: Array[Int],
@@ -164,9 +160,7 @@ object Extract {
     val tokenClassifier = cfg.tokenClassifier.orNull
     def tokenClassOf(text: String): String =
       if (tokenClassifier == null) LayoutLabel.TOKEN_OTHER else tokenClassifier(text)
-    val wordIds =
-      if (cfg.emitWordIds) allWords.map(w => annIds.annId(LayoutLabel.WORD, w.begin, w.end))
-      else Array.fill(nWords)("")
+    val wordIds = allWords.map(w => annIds.annId(LayoutLabel.WORD, w.begin, w.end))
     val parentBoxes = ArraySeq.unsafeWrapArray(blocks0.map(_.box))
     val childBoxes = ArraySeq.unsafeWrapArray(allWords.map(_.box))
     val parentOf = Array.fill(nWords)(-1)
@@ -243,19 +237,17 @@ object Extract {
 
         // ---- synthetic text lines (TextLineService analogue,
         // pipe/order.py:581): rows split at paragraph breaks ----
-        if (cfg.emitLines) {
-          lineRes.clear()
-          Lines.linesOf(childBoxes, wis, wis.length, wl, seg.pageWidth,
-            makeSubLines = true, cfg.paragraphBreak, lineRes)
-          var li = 0
-          while (li < lineRes.length) {
-            val lr = lineRes(li)
-            val b = spanBegin(lr.words)
-            val e = spanEnd(lr.words)
-            linesBuf += LineOut(annIds.annId(LayoutLabel.LINE, b, e), blockIds(bi), b, e, lr.words.length)
-            lineBoxesBuf += lr.box
-            li += 1
-          }
+        lineRes.clear()
+        Lines.linesOf(childBoxes, wis, wis.length, wl, seg.pageWidth,
+          makeSubLines = true, cfg.paragraphBreak, lineRes)
+        var li = 0
+        while (li < lineRes.length) {
+          val lr = lineRes(li)
+          val b = spanBegin(lr.words)
+          val e = spanEnd(lr.words)
+          linesBuf += LineOut(annIds.annId(LayoutLabel.LINE, b, e), blockIds(bi), b, e, lr.words.length)
+          lineBoxesBuf += lr.box
+          li += 1
         }
       }
       bi += 1
@@ -296,7 +288,7 @@ object Extract {
       // backfilled whole-page placeholders are excluded for the same
       // reason as in word matching: a page-covering box out-scores
       // every real parent
-      val pIdx = (0 until realBlockCount).filter(i => cfg.lineMatchParents.contains(blocks0(i).kind))
+      val pIdx = (0 until realBlockCount).filter(i => blocks0(i).kind == LineMatchParent)
       if (pIdx.nonEmpty) {
         Match.matchByIntersection(
           pIdx.map(blocks0(_).box).toIndexedSeq, lineBoxesBuf.toIndexedSeq,

@@ -95,9 +95,9 @@ object Stream {
     *  1. stateless quality gate (Gopher verdict — pure Columns, no
     *     state store, no shuffle);
     *  2. first-occurrence dedup WITHIN the micro-batch (md5 keyed —
-    *     `incrementalDedup` only answers "seen in history?", so
+    *     `incrementalDedupWithHandles` only answers "seen in history?", so
     *     intra-batch copies are collapsed here);
-    *  3. [[graft.operators.Dedup.incrementalDedup]] against the
+    *  3. [[graft.operators.Dedup.incrementalDedupWithHandles]] against the
     *     history AS OF THIS BATCH — the Bloom prefilter is rebuilt
     *     from `historyDir` each micro-batch, so batch N's survivors
     *     are visible to batch N+1 without any stream-side state;
@@ -137,9 +137,9 @@ object Stream {
         // deterministic pick) before the history append
         val batchUnique = passing.join(firstIds, Seq(idCol), "leftsemi")
           .dropDuplicates(idCol).drop("__h")
-        // WithHandles + unpersist after the append materializes: the
+        // unpersist the handles after the append materializes: the
         // SQL CacheManager holds cached plans until an explicit
-        // release, so the no-handle variant would leak two cached
+        // release, so dropping them would leak two cached
         // frames PER MICRO-BATCH — one of them the full (growing)
         // history key set — unbounded executor storage growth on a
         // standing stream

@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
 object BenchQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val samples = if (args.nonEmpty) args(0).toInt else 3
     val names: Seq[String] =
       if (args.length > 1) args.drop(1).toSeq

@@ -15,7 +15,8 @@ import scala.collection.mutable
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val name = args(0)
     val runs = if (args.length > 1) args(1).toInt else 1
     val spark = SparkSession.builder()

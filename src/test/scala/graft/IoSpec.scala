@@ -439,13 +439,13 @@ class StreamDedupSpec extends AnyFunSuite {
       assert(afterB2.map(_._1) == Seq(1L, 4L, 6L))
       assert(afterB2.map(_._2).toSet == Set(tA, tB, tC))
       // batch twin: the same two batches folded through the BATCH
-      // incrementalDedup must keep the identical id set
+      // incrementalDedupWithHandles must keep the identical id set
       val hist1 = b1.toDF("id", "text")
         .filter(graft.operators.TextStats.gopherCols(col("text")).ok)
         .groupBy("text").agg(min("id").as("id"))
-      val flags2 = graft.operators.Dedup.incrementalDedup(
+      val flags2 = graft.operators.Dedup.incrementalDedupWithHandles(
         b2.toDF("id", "text").filter(graft.operators.TextStats.gopherCols(col("text")).ok),
-        hist1, "id", "text")
+        hist1, "id", "text")._1
       val batchKept = hist1.select("id").as[Long].collect().toSet ++
         flags2.filter(!col("is_dup")).select("id").as[Long].collect().toSet
       assert(batchKept == Set(1L, 4L, 6L))

@@ -7,7 +7,7 @@ import graft.operators._
 /** Specs for the training-data operators: dedup family, similarity
   * search, text stats, multimodal plumbing.
   */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with org.scalatest.PrivateMethodTester {
   lazy val spark = TestSpark.spark
 
   private def docsWithDups = {
@@ -59,6 +59,49 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.shinglesOf("aaaa", 3).toSeq == Seq("aaa"))
     assert(Dedup.shinglesOf("a  b", 3).toSeq == Seq("a b"))
     assert(Dedup.shinglesOf("ab", 3).toSeq == Seq("ab"))
+  }
+
+  test("signature rows shingle once and stay bit-identical to minhashSig") {
+    import spark.implicits._
+    // the per-slot MinHash loop, restated: XXH64 (seed 42) per shingle,
+    // then a xorshift-multiply re-seed per slot, minimum per slot
+    def reference(text: String, k: Int, n: Int): Array[Long] = {
+      val base = Dedup.shinglesOf(if (text == null) "" else text, k)
+        .map(XxHash.hashUtf8(_, 42L))
+      Array.tabulate(n) { i =>
+        val seed = i * -7046029288634856825L + 2870177450012600261L
+        base.foldLeft(Long.MaxValue) { (m, b) =>
+          var h = b ^ seed
+          h ^= h >>> 33; h *= -4417276706812531889L; h ^= h >>> 29
+          math.min(m, h)
+        }
+      }
+    }
+    val rnd = new scala.util.Random(11)
+    def piece(supp: Boolean): String = rnd.nextInt(4) match {
+      case 0 => " "
+      case 1 => rnd.alphanumeric.take(1 + rnd.nextInt(6)).mkString
+      case 2 => rnd.nextInt(0xd800).toChar.toString // any BMP scalar below the surrogates
+      case _ =>
+        if (supp) new String(Character.toChars(0x10000 + rnd.nextInt(0x100000)))
+        else "Ä\t"
+    }
+    val bmp = Seq.fill(60)(Seq.fill(1 + rnd.nextInt(40))(piece(supp = false)).mkString)
+    val supp = Seq.fill(30)(Seq.fill(1 + rnd.nextInt(40))(piece(supp = true)).mkString)
+    val texts = (bmp ++ supp ++ Seq(null, "", " ", "ab", "😀", "😀b")).toVector
+    assert(supp.exists(_.codePoints().anyMatch(Character.isSupplementaryCodePoint)))
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val signatures = PrivateMethod[org.apache.spark.sql.DataFrame](Symbol("signatures"))
+    val rows = (Dedup invokePrivate signatures(df, "doc_id", "text", 3, 64))
+      .as[(Long, Array[Long], Array[String])].collect()
+    assert(rows.length == texts.length)
+    for ((id, sig, sh) <- rows) {
+      val t = texts(id.toInt)
+      val ref = reference(t, 3, 64)
+      assert(java.util.Arrays.equals(sig, ref), s"row $id: frame signature")
+      assert(java.util.Arrays.equals(Dedup.minhashSig(t, 3, 64), ref), s"row $id: minhashSig")
+      assert(sh.toSeq == Dedup.shinglesOf(if (t == null) "" else t, 3).toSeq, s"row $id: shingles")
+    }
   }
 
   test("signature-agreement prefilter only engages at numHashes >= 64") {
@@ -432,6 +475,43 @@ class MultimodalSpec extends AnyFunSuite {
 class DedupRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  test("verified LSH pairs are band candidates: minhash and embedding share one band core") {
+    import spark.implicits._
+    for (seed <- Seq(3, 17)) {
+      val rnd = new scala.util.Random(seed)
+      // planted corpus: 25 60-word sources with 3 one-word mutations each, plus
+      // 50 unrelated documents over the same vocabulary
+      val vocab = Vector.fill(300)(rnd.alphanumeric.take(3 + rnd.nextInt(6)).mkString.toLowerCase)
+      def words(n: Int) = Vector.fill(n)(vocab(rnd.nextInt(vocab.length)))
+      val texts = (0 until 25).flatMap { _ =>
+        val src = words(60)
+        src +: Seq.fill(3)(src.updated(rnd.nextInt(src.length), vocab(rnd.nextInt(vocab.length))))
+      }.map(_.mkString(" ")) ++ Seq.fill(50)(words(60).mkString(" "))
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val cand = Dedup.minhashLshCandidates(docs, "doc_id", "text")
+        .as[(Long, Long)].collect().toSet
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text")
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(pairs.size >= 25 * 3, s"seed $seed: ${pairs.size} minhash pairs")
+      assert(pairs.subsetOf(cand), s"seed $seed: ${pairs -- cand} outside the candidates")
+
+      // planted vectors: 20 sources with 2 jittered copies each, plus 40
+      // unrelated vectors
+      def vec() = Array.fill(16)(rnd.nextGaussian())
+      val vecs = (0 until 20).flatMap { _ =>
+        val v = vec()
+        v +: Seq.fill(2)(v.map(x => x + 0.01 * rnd.nextGaussian()))
+      } ++ Seq.fill(40)(vec())
+      val emb = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toDF("vec_id", "v")
+      val eCand = Dedup.embeddingNearDupCandidates(emb, "vec_id", "v")
+        .as[(Long, Long)].collect().toSet
+      val ePairs = Dedup.embeddingNearDupPairs(emb, "vec_id", "v")
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(ePairs.size >= 20 * 3, s"seed $seed: ${ePairs.size} embedding pairs")
+      assert(ePairs.subsetOf(eCand), s"seed $seed: ${ePairs -- eCand} outside the candidates")
+    }
+  }
+
   test("simhash banded pairs equal brute force over signatures at hamming<=3") {
     import spark.implicits._
     // near-dup fixture: base sentences + one-token edits (small hamming)
@@ -694,7 +774,7 @@ class ComponentsSpec extends AnyFunSuite {
     // chain 1-2-3, pair 10-11, singletons 20,21
     val nodes = Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val got = Dedup.components(nodes, pairs)
+    val got = Dedup.componentsWithRounds(nodes, pairs)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 21L))
@@ -705,7 +785,7 @@ class ComponentsSpec extends AnyFunSuite {
     val n = 12
     val nodes = (1L to n.toLong).toDF("id")
     val pairs = (1L until n.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.components(nodes, pairs)
+    val got = Dedup.componentsWithRounds(nodes, pairs)._1
       .collect().map(r => r.getLong(1)).distinct
     assert(got.toList == List(1L))
   }
@@ -716,7 +796,7 @@ class ComponentsSpec extends AnyFunSuite {
     val nodes = (1L to n.toLong).toDF("id")
     val pairs = (1L until n.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val ex = intercept[IllegalArgumentException] {
-      Dedup.components(nodes, pairs, maxIter = 2).collect()
+      Dedup.componentsWithRounds(nodes, pairs, maxIter = 2)._1.collect()
     }
     assert(ex.getMessage.contains("did not converge"))
   }
@@ -730,9 +810,9 @@ class ComponentsSpec extends AnyFunSuite {
     val nodes = (1L to n.toLong).toDF("id")
     val pairs = (1L until n.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
-      Dedup.components(nodes, pairs).collect() // diameter > default bound
+      Dedup.componentsWithRounds(nodes, pairs)._1.collect() // diameter > default bound
     }
-    val got = Dedup.componentsLargeSmallStar(nodes, pairs, maxIter = 8)
+    val got = Dedup.componentsLargeSmallStarWithRounds(nodes, pairs, maxIter = 8)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == n && got.forall(_._2 == 1L))
   }
@@ -743,22 +823,24 @@ class ComponentsSpec extends AnyFunSuite {
     // two clusters + bridges + singletons
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 12L), (12L, 14L),
       (20L, 21L), (21L, 22L), (22L, 20L), (14L, 16L), (5L, 7L)).toDF("id_a", "id_b")
-    val naive = Dedup.components(nodes, pairs)
+    val naive = Dedup.componentsWithRounds(nodes, pairs)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toList
-    val stars = Dedup.componentsLargeSmallStar(nodes, pairs)
+    val stars = Dedup.componentsLargeSmallStarWithRounds(nodes, pairs)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toList
     assert(stars == naive)
   }
 
   test("pair ids outside the node set cannot mask convergence (label-sum soundness)") {
     import spark.implicits._
-    // adversarial case for the sum check: edge (8,100) with 100 ∉
-    // nodes would materialize label 8 for the phantom node, exactly
-    // offsetting 3→2's decrease in round 1 — the node-set constraint
-    // must keep iterating until 10 reaches the true component min 2
+    // adversarial case for min-label's label-sum convergence check
+    // (large-star/small-star compares edge sets instead): edge (8,100)
+    // with 100 ∉ nodes would materialize label 8 for the phantom node,
+    // exactly offsetting 3→2's decrease in round 1 — the node-set
+    // constraint must keep iterating until 10 reaches the true
+    // component min 2
     val nodes = Seq(2L, 3L, 8L, 10L).toDF("id")
     val pairs = Seq((2L, 3L), (3L, 10L), (8L, 100L)).toDF("id_a", "id_b")
-    val got = Dedup.components(nodes, pairs)
+    val got = Dedup.componentsWithRounds(nodes, pairs)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(2L -> 2L, 3L -> 2L, 10L -> 2L, 8L -> 8L), s"got $got")
   }
@@ -784,9 +866,9 @@ class ComponentsSpec extends AnyFunSuite {
       }.toList
       val nodes = (1L to n.toLong).toDF("id")
       val pairs = edges.toDF("id_a", "id_b")
-      val naive = Dedup.components(nodes, pairs, maxIter = 64)
+      val naive = Dedup.componentsWithRounds(nodes, pairs, maxIter = 64)._1
         .collect().map(r => (r.getLong(0), r.getLong(1))).toList
-      val stars = Dedup.componentsLargeSmallStar(nodes, pairs)
+      val stars = Dedup.componentsLargeSmallStarWithRounds(nodes, pairs)._1
         .collect().map(r => (r.getLong(0), r.getLong(1))).toList
       assert(naive == expect, s"seed $seed: propagation != union-find")
       assert(stars == expect, s"seed $seed: stars != union-find")

@@ -381,7 +381,7 @@ class TrainFormatSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val history = (0L until 120L).filter(_ % 3 == 0)
       .map(i => s"doc text number $i").toDF("text")
-    val got = Dedup.incrementalDedup(batch, history, "doc_id", "text", fpp = 0.2)
+    val got = Dedup.incrementalDedupWithHandles(batch, history, "doc_id", "text", fpp = 0.2)._1
       .select("doc_id", "bloom_hit", "is_dup")
       .as[(Long, Boolean, Boolean)].collect()
     assert(got.length == 300)
@@ -393,13 +393,13 @@ class TrainFormatSpec extends AnyFunSuite {
     }
     // empty history: everything is new, nothing crashes on the
     // degenerate filter
-    val none = Dedup.incrementalDedup(batch, history.limit(0), "doc_id", "text")
+    val none = Dedup.incrementalDedupWithHandles(batch, history.limit(0), "doc_id", "text")._1
       .select("is_dup").as[Boolean].collect()
     assert(none.length == 300 && none.forall(_ == false))
     // null text: definitively new (null-safe probe), never an NPE
     val withNull = batch.unionByName(
       Seq((300L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val nullRow = Dedup.incrementalDedup(withNull, history, "doc_id", "text")
+    val nullRow = Dedup.incrementalDedupWithHandles(withNull, history, "doc_id", "text")._1
       .filter(col("doc_id") === 300L)
       .select("bloom_hit", "is_dup").as[(Boolean, Boolean)].collect()
     assert(nullRow.toSeq == Seq((false, false)))
