@@ -100,7 +100,7 @@ object Pdf {
   def scanObjects(bytes: Array[Byte]): Vector[PdfObj] =
     scanObjectsStr(new String(bytes, StandardCharsets.ISO_8859_1))
 
-  /** String-level scan so [[splitPages]] materializes the (large)
+  /** String-level scan so [[prepare]] materializes the (large)
     * Latin-1 view exactly once per document.
     */
   private def scanObjectsStr(s: String): Vector[PdfObj] = {
@@ -520,9 +520,6 @@ object Pdf {
     */
   def decodeStream(dict: String, data: Array[Byte]): Option[Array[Byte]] =
     transportChain(data, filtersOf(dict), dict)
-
-  private def decodeContent(dict: String, data: Array[Byte]): Option[String] =
-    decodeStream(dict, data).map(new String(_, StandardCharsets.ISO_8859_1))
 
   // ---------------------------------------------------------------
   // Font state (round 5): /Resources /Font resolution, /ToUnicode
@@ -1307,12 +1304,21 @@ object Pdf {
       }
     }
 
-  /** Shared document prep: object scan over ONE Latin-1
-    * materialization, stream decryption, ObjStm expansion — the
-    * pipeline both [[splitPages]] and [[extractImages]] run before
-    * walking pages.
+  /** A prepared document: the object index and the page objects in
+    * document order (1-based page numbers follow this order — the
+    * order `/Kids` arrays list them for the linear writers this subset
+    * targets).
     */
-  private def preparedObjects(text: String): Vector[PdfObj] = {
+  private final case class PdfDoc(byNum: Map[Int, PdfObj], pages: Vector[PdfObj])
+
+  /** Shared document prep for every page consumer: object scan over
+    * ONE Latin-1 materialization (the scan and the encryption
+    * detection share it — a second copy would double the transient
+    * memory per document on the extraction hot path), stream
+    * decryption, ObjStm expansion, page discovery.
+    */
+  private def prepare(bytes: Array[Byte]): PdfDoc = {
+    val text = new String(bytes, StandardCharsets.ISO_8859_1)
     val scanned = scanObjectsStr(text)
     // encryption applies to STREAM payloads (strings inside content
     // streams ride along; dict keys are plaintext)
@@ -1328,51 +1334,42 @@ object Pdf {
         // split (from plaintext dicts) survives, text is empty
         scanned.map(o => o.copy(stream = None))
     }
-    expandObjectStreams(prepared)
+    val objects = expandObjectStreams(prepared)
+    PdfDoc(objects.map(o => o.num -> o).toMap, objects.filter(o => isPageDict(o.dict)))
   }
 
   private def isPageDict(body: String): Boolean =
     body.contains("/Type /Page") && !body.contains("/Type /Pages") ||
       body.contains("/Type/Page") && !body.contains("/Type/Pages")
 
+  /** A page's content: its `/Contents` streams (one ref or an array),
+    * decoded and joined in order with a newline — ISO 32000-1 §7.8.2
+    * reads a page's streams as one, so font, text state and pending
+    * operands carry across the split. A page without `/Contents`
+    * falls back to an inline stream on the page object itself.
+    * Streams that do not decode drop out. Text, words and inline
+    * images all walk this one string.
+    */
+  private def pageContent(page: PdfObj, byNum: Map[Int, PdfObj]): String = {
+    val refs: Seq[Int] = ContentsArrRe.findFirstMatchIn(page.dict) match {
+      case Some(arr) => RefRe.findAllMatchIn(arr.group(1)).flatMap(_.group(1).toIntOption).toSeq
+      case None => ContentsRefRe.findFirstMatchIn(page.dict).flatMap(_.group(1).toIntOption).toSeq
+    }
+    (if (refs.nonEmpty) refs.flatMap(byNum.get) else Seq(page))
+      .flatMap(c => c.stream.flatMap(decodeStream(c.dict, _)))
+      .map(new String(_, StandardCharsets.ISO_8859_1)).mkString("\n")
+  }
+
   /** Split a PDF byte array into pages (1-based page numbers, in
-    * document object order — the order `/Kids` arrays list them for
-    * the linear writers this subset targets).
+    * document object order), each with the text of its content.
     */
   def splitPages(bytes: Array[Byte]): Seq[PdfPage] = {
-    // ONE Latin-1 materialization per document (the scan and the
-    // encryption detection share it — a second copy would double the
-    // transient memory per document on the extraction hot path)
-    val text = new String(bytes, StandardCharsets.ISO_8859_1)
-    val objects = preparedObjects(text)
-    val byNum = objects.map(o => o.num -> o).toMap
+    val doc = prepare(bytes)
     val fontCache = scala.collection.mutable.HashMap.empty[Int, PdfFont]
-    def contentText(o: PdfObj, fonts: Map[String, PdfFont]): String =
-      o.stream.flatMap(decodeContent(o.dict, _))
-        .map(extractText(_, fonts)).getOrElse("")
-    val pages = ArrayBuffer.empty[PdfPage]
-    var pageNo = 0
-    for (o <- objects) {
-      val body = o.dict
-      if (isPageDict(body)) {
-        pageNo += 1
-        val fonts = fontsOf(body, byNum, fontCache)
-        val refs: Seq[Int] = ContentsArrRe.findFirstMatchIn(body) match {
-          case Some(arr) => RefRe.findAllMatchIn(arr.group(1)).flatMap(_.group(1).toIntOption).toSeq
-          case None => ContentsRefRe.findFirstMatchIn(body).flatMap(_.group(1).toIntOption).toSeq
-        }
-        val text =
-          if (refs.nonEmpty)
-            // multiple content streams concatenate (spec: treated as one
-            // stream with whitespace between), non-empty parts joined
-            refs.flatMap(byNum.get).map(contentText(_, fonts)).filter(_.nonEmpty).mkString(" ")
-          else
-            // inline content stream inside the page object
-            contentText(o, fonts)
-        pages += PdfPage(pageNo, o.off.toLong, text)
-      }
+    doc.pages.zipWithIndex.map { case (o, i) =>
+      val fonts = fontsOf(o.dict, doc.byNum, fontCache)
+      PdfPage(i + 1, o.off.toLong, extractText(pageContent(o, doc.byNum), fonts))
     }
-    pages.toSeq
   }
 
   // ---------------------------------------------------------------
@@ -1460,11 +1457,8 @@ object Pdf {
     * as that page of the source.
     */
   def emitPages(bytes: Array[Byte]): Seq[(Int, Array[Byte])] = {
-    val text = new String(bytes, StandardCharsets.ISO_8859_1)
-    val objects = preparedObjects(text)
-    val byNum = objects.map(o => o.num -> o).toMap
-    objects.filter(o => isPageDict(o.dict)).zipWithIndex
-      .map { case (p, i) => (i + 1, emitSinglePage(p, byNum)) }
+    val doc = prepare(bytes)
+    doc.pages.zipWithIndex.map { case (p, i) => (i + 1, emitSinglePage(p, doc.byNum)) }
   }
 
   private def emitSinglePage(page: PdfObj, byNum: Map[Int, PdfObj]): Array[Byte] = {
@@ -1847,6 +1841,19 @@ object Pdf {
       })
     }
 
+  /** A JPEG payload as a [[PdfImage]]: dims and channels are the
+    * values the JDK decoder reads, `data` stays the JPEG. A corrupt
+    * JPEG skips the image, never garbage dims.
+    */
+  private def jpegImage(pageNo: Int, name: String, jpeg: Array[Byte]): Option[PdfImage] = {
+    imageIoReady
+    val img =
+      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(jpeg))
+      catch { case scala.util.control.NonFatal(_) => null }
+    Option(img).map(im => PdfImage(pageNo, name, im.getWidth,
+      im.getHeight, im.getRaster.getNumBands, "jpeg", jpeg))
+  }
+
   private def decodeImage(pageNo: Int, name: String, o: PdfObj,
       byNum: Map[Int, PdfObj]): Option[PdfImage] = {
     val filters = filtersOf(o.dict)
@@ -1857,15 +1864,7 @@ object Pdf {
         // the JPEG decodes with the JDK — dims/channels are the TRUE
         // decoded values, and `data` stays the compressed JPEG so
         // downstream consumers re-decode with any codec they like
-        transportUnwrap(filters.dropRight(1)).flatMap { j =>
-          imageIoReady
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(j))
-            catch { case scala.util.control.NonFatal(_) => null }
-          // corrupt JPEG → skip the image, never garbage dims
-          Option(img).map(im => PdfImage(pageNo, name, im.getWidth,
-            im.getHeight, im.getRaster.getNumBands, "jpeg", j))
-        }
+        transportUnwrap(filters.dropRight(1)).flatMap(jpegImage(pageNo, name, _))
       case Some("CCITTFaxDecode") | Some("CCF") =>
         // bitonal scans — the dominant raster in scanned PDFs
         for {
@@ -1948,168 +1947,181 @@ object Pdf {
     None
   }
 
-  /** Inline images of a decoded content stream (§8.9.7):
-    * `BI <key-value pairs> ID<one whitespace><binary data> EI`, with
-    * the abbreviated key/name forms (`/W /H /BPC /CS /F /IM`). The
-    * unfiltered payload length is computed exactly from the declared
-    * geometry; filtered payloads (Flate/ASCII85/ASCIIHex) are
-    * delimited by trying successive ` EI` candidates until the chain
-    * decodes to exactly the declared size (binary data may contain
-    * the two letters EI, so the first occurrence is a guess, not a
-    * fact). A PDF-2.0 `/L` entry (encoded byte length) removes the
-    * guesswork entirely; inline DCT (JPEG) additionally delimits
-    * WITHOUT `/L` when bare (the JPEG marker structure proves its own
-    * end — [[jpegScanLength]]) or wrapped in a self-terminating
-    * transport (ASCII85 `~>` / ASCIIHex `>`). Anything indeterminate
-    * — unknown color space, missing dims, inline CCITT, DCT behind a
-    * non-self-terminating transport with no /L — skips, never
-    * mislabels.
-    *
-    * The scan is a single forward cursor: once an image's payload is
-    * delimited, scanning resumes PAST it, so 'BI' byte runs inside
-    * consumed binary data cannot start phantom parses; matchers run
-    * against the one content string (no per-candidate copies).
-    * `startIdx` continues BI#n numbering across a page's multiple
-    * content streams; returns the images and the next index.
+  /** One inline image's header (§8.9.7: `BI <key-value pairs>
+    * ID<one whitespace><binary data> EI`, with the abbreviated key
+    * and name forms `/W /H /BPC /CS /F /IM /L`), parsed once for both
+    * consumers: the image path ([[inlineImages]]) and the content
+    * walkers' skip ([[inlineImageEnd]]). `geometry` is (width,
+    * height, channels, bpc) when the dims and the colour space are
+    * known; `declaredLen` is PDF 2.0's `/L` (byte length of the
+    * ENCODED data between ID and EI) when it fits the content.
     */
-  private def inlineImages(content: String, pageNo: Int,
-      startIdx: Int): (Seq[PdfImage], Int) = {
-    val out = ArrayBuffer.empty[PdfImage]
-    var idx = startIdx
-    val biM = BiTokenRe.pattern.matcher(content)
+  private final case class InlineImage(parms: String, dataStart: Int,
+      filters: Seq[String], geometry: Option[(Int, Int, Int, Int)],
+      declaredLen: Option[Int]) {
+    def dct: Boolean = filters.lastOption.exists(f => f == "DCTDecode" || f == "DCT")
+
+    /** Exact sample byte count of the declared geometry. */
+    def rawLen: Option[Int] = geometry
+      .map { case (w, h, ch, bpc) => ((w.toLong * ch * bpc + 7) / 8) * h }
+      .filter(l => l > 0 && l <= Int.MaxValue).map(_.toInt)
+
+    /** The transport-decoded payload: a JPEG for DCT, else exactly
+      * `rawLen` sample bytes; None when it does not decode to that.
+      */
+    def decode(encoded: Array[Byte]): Option[Array[Byte]] =
+      if (dct) transportChain(encoded, filters.dropRight(1), parms)
+      else rawLen.flatMap(n => transportChain(encoded, filters, parms).filter(_.length == n))
+
+    def toImage(pageNo: Int, name: String, decoded: Array[Byte]): Option[PdfImage] =
+      if (dct) jpegImage(pageNo, name, decoded)
+      else geometry.collect { case (w, h, ch, bpc) if Set(1, 2, 4, 8, 16)(bpc) =>
+        PdfImage(pageNo, name, w, h, ch, "raw", decoded, bpc)
+      }
+  }
+
+  /** The header of the inline image whose `BI` token ends at `biEnd`;
+    * None when no `ID` follows.
+    */
+  private def inlineHeader(content: String, biEnd: Int): Option[InlineImage] = {
     val idM = IdTokenRe.pattern.matcher(content)
-    val eiM = EiTokenRe.pattern.matcher(content)
+    if (!idM.find(biEnd)) return None
+    val parms = content.substring(biEnd, idM.start)
+    def dim(key: String): Option[Int] =
+      InlineDimRe(key).findFirstMatchIn(parms).flatMap(_.group(1).toIntOption)
+    val isMask = boolParam(parms, "/IM") || boolParam(parms, "/ImageMask")
+    val channels: Option[Int] =
+      if (isMask) Some(1)
+      else InlineCsRe.findFirstMatchIn(parms).map(_.group(1)).flatMap {
+        case "/G" | "/DeviceGray" => Some(1)
+        case "/RGB" | "/DeviceRGB" => Some(3)
+        case "/CMYK" | "/DeviceCMYK" => Some(4)
+        case "/I" | "/Indexed" => Some(1) // palette indices
+        case arr if arr.startsWith("[") =>
+          // array form: decided by the FIRST name — [/I base hival
+          // lookup] is indexed (1 component per sample)
+          NameRe.findFirstMatchIn(arr).map(_.group(1)) match {
+            case Some("I") | Some("Indexed") => Some(1)
+            case _ => None
+          }
+        case _ => None // named resource color space — indeterminate
+      }
+    val dataStart = idM.end // ID plus its single whitespace
+    Some(InlineImage(parms, dataStart,
+      filters = InlineFilterRe.findFirstMatchIn(parms)
+        .map(m => NameRe.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
+        .getOrElse(Nil),
+      geometry = for (w <- dim("w"); h <- dim("h"); ch <- channels)
+        yield (w, h, ch, if (isMask) 1 else dim("bpc").getOrElse(8)),
+      declaredLen = InlineLenRe.findFirstMatchIn(parms).flatMap(_.group(1).toIntOption)
+        .filter(l => l >= 0 && dataStart.toLong + l <= content.length)))
+  }
+
+  /** Where the encoded payload of `im` ends in `content` (exclusive),
+    * with its [[InlineImage.decode]]d bytes when they decode. The one
+    * payload-end rule, in priority order:
+    *   - `/L` removes all delimiting guesswork;
+    *   - inline DCT (JPEG) delimits when bare — the JPEG marker
+    *     structure proves its own end ([[jpegScanLength]]) — or
+    *     behind a self-terminating transport (ASCII85 `~>`, ASCIIHex
+    *     `>`) whose decode is EXACTLY one structurally complete JPEG:
+    *     ' ', 'E', 'I', '/' and digits are all ASCII85 body chars, so
+    *     a missing '~>' would otherwise adopt a LATER stream's
+    *     terminator. EI candidates are never tried for DCT: a JPEG
+    *     body may contain ' EI' and decoders tolerate trailing bytes;
+    *   - an unfiltered payload is exactly `rawLen` bytes long;
+    *   - a filtered one ends at the first of up to 16 whitespace-
+    *     delimited ` EI` candidates whose bytes decode to exactly
+    *     `rawLen` (binary data may spell ' EI', so the first
+    *     occurrence is a guess, not a fact).
+    * None = undelimitable (unknown colour space or dims, inline
+    * CCITT, DCT behind another transport without `/L`).
+    */
+  private def inlineExtent(content: String, im: InlineImage): Option[(Int, Option[Array[Byte]])] = {
+    val ds = im.dataStart
+    def encoded(end: Int): Array[Byte] =
+      content.substring(ds, end).getBytes(StandardCharsets.ISO_8859_1)
+    def at(end: Int): Option[(Int, Option[Array[Byte]])] = Some((end, im.decode(encoded(end))))
+    im.declaredLen match {
+      case Some(l) => at(ds + l)
+      case None if im.dct =>
+        if (im.filters.size == 1) jpegScanLength(content, ds).flatMap(l => at(ds + l))
+        else {
+          val end = im.filters.head match {
+            case "ASCII85Decode" | "A85" =>
+              val t = content.indexOf("~>", ds); if (t >= 0) Some(t + 2) else None
+            case "ASCIIHexDecode" | "AHx" =>
+              val t = content.indexOf('>', ds); if (t >= 0) Some(t + 1) else None
+            case _ => None
+          }
+          end.flatMap(e => im.decode(encoded(e))
+            .filter(j => jpegScanLength(new String(j, StandardCharsets.ISO_8859_1), 0)
+              .contains(j.length))
+            .map(j => (e, Some(j))))
+        }
+      case None =>
+        im.rawLen.flatMap { n =>
+          if (im.filters.isEmpty) { if (ds.toLong + n <= content.length) at(ds + n) else None }
+          else {
+            val eiM = EiTokenRe.pattern.matcher(content)
+            var tries = 0
+            var found: Option[(Int, Option[Array[Byte]])] = None
+            var from = ds
+            while (found.isEmpty && tries < 16 && eiM.find(from)) {
+              tries += 1
+              from = eiM.start + 1
+              val end = eiM.start
+              found = im.decode(encoded(end)).map(d => (end, Some(d)))
+            }
+            found
+          }
+        }
+    }
+  }
+
+  /** Inline images of a page's content: every `BI` whose payload
+    * [[inlineExtent]] delimits and decodes, named `BI#n` in content
+    * order. The scan is a single forward cursor: once an image's
+    * payload is delimited, scanning resumes PAST it, so 'BI' byte runs
+    * inside consumed binary data cannot start phantom parses. Anything
+    * indeterminate skips, never mislabels.
+    */
+  private def inlineImages(content: String, pageNo: Int): Seq[PdfImage] = {
+    val out = ArrayBuffer.empty[PdfImage]
+    val biM = BiTokenRe.pattern.matcher(content)
     var pos = 0
     while (pos <= content.length && biM.find(pos)) {
       // default resume point: just past this BI token (false alarm)
-      var next = biM.end
-      if (idM.find(biM.end)) {
-        val parms = content.substring(biM.end, idM.start)
-        val dataStart = idM.end // ID plus its single whitespace
-        def dim(key: String): Option[Int] =
-          InlineDimRe(key).findFirstMatchIn(parms).flatMap(_.group(1).toIntOption)
-        val isMask = boolParam(parms, "/IM") || boolParam(parms, "/ImageMask")
-        val chOpt: Option[Int] =
-          if (isMask) Some(1)
-          else InlineCsRe.findFirstMatchIn(parms).map(_.group(1)).flatMap {
-            case "/G" | "/DeviceGray" => Some(1)
-            case "/RGB" | "/DeviceRGB" => Some(3)
-            case "/CMYK" | "/DeviceCMYK" => Some(4)
-            case "/I" | "/Indexed" => Some(1) // palette indices
-            case arr if arr.startsWith("[") =>
-              // array form: decided by the FIRST name — [/I base hival
-              // lookup] is indexed (1 component per sample)
-              NameRe.findFirstMatchIn(arr).map(_.group(1)) match {
-                case Some("I") | Some("Indexed") => Some(1)
-                case _ => None
-              }
-            case _ => None // named resource color space — indeterminate
-          }
-        val filters = InlineFilterRe.findFirstMatchIn(parms)
-          .map(m => NameRe.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-          .getOrElse(Nil)
-        // /L (PDF 2.0 §8.9.7: byte length of the ENCODED data between
-        // ID and EI) removes all delimiting guesswork when present
-        val lOpt = InlineLenRe.findFirstMatchIn(parms)
-          .flatMap(_.group(1).toIntOption)
-          .filter(l => l >= 0 && dataStart.toLong + l <= content.length)
-        def encodedAt(l: Int): Array[Byte] =
-          content.substring(dataStart, dataStart + l)
-            .getBytes(StandardCharsets.ISO_8859_1)
-        if (filters.lastOption.exists(f => f == "DCTDecode" || f == "DCT")) {
-          // inline JPEG: delimitable when (a) /L declares the encoded
-          // length, (b) the DCT payload is bare — the JPEG marker
-          // structure itself proves the boundary (jpegScanLength), or
-          // (c) the outermost transport filter is self-terminating
-          // (ASCII85 '~>', ASCIIHex '>'). EI-candidate scanning is
-          // never used here: a JPEG body may contain ' EI' and
-          // decoders tolerate trailing bytes, so a decode succeeding
-          // at some candidate wouldn't prove the boundary.
-          // terminator-derived lengths additionally require the decode
-          // to be EXACTLY one structurally complete JPEG: ' ', 'E',
-          // 'I', '/', digits are all valid ASCII85 body chars, so a
-          // missing/corrupt '~>' would otherwise let indexOf adopt a
-          // LATER stream's terminator, emit a junk-extended JPEG
-          // (ImageIO tolerates trailing bytes), and jump the cursor
-          // past any intervening images
-          var terminatorDerived = false
-          val structuralLen: Option[Int] =
-            if (lOpt.isDefined) None
-            else if (filters.size == 1) jpegScanLength(content, dataStart)
-            else filters.head match {
-              case "ASCII85Decode" | "A85" =>
-                terminatorDerived = true
-                val t = content.indexOf("~>", dataStart)
-                if (t >= 0) Some(t + 2 - dataStart) else None
-              case "ASCIIHexDecode" | "AHx" =>
-                terminatorDerived = true
-                val t = content.indexOf('>', dataStart)
-                if (t >= 0) Some(t + 1 - dataStart) else None
-              case _ => None
-            }
-          for {
-            l <- lOpt.orElse(structuralLen)
-            jpeg <- transportChain(encodedAt(l), filters.dropRight(1), parms)
-            if !terminatorDerived || jpegScanLength(
-              new String(jpeg, StandardCharsets.ISO_8859_1), 0).contains(jpeg.length)
-            img <- {
-              imageIoReady
-              try Option(javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(jpeg)))
-              catch { case scala.util.control.NonFatal(_) => None }
-            }
-          } {
-            idx += 1
-            out += PdfImage(pageNo, s"BI#$idx", img.getWidth, img.getHeight,
-              img.getRaster.getNumBands, "jpeg", jpeg)
-            next = dataStart + l
-          }
-        } else for {
-          w <- dim("w"); h <- dim("h")
-          bpc <- if (isMask) Some(1) else dim("bpc").orElse(Some(8)).filter(b => Set(1, 2, 4, 8, 16)(b))
-          ch <- chOpt
-          rawLen = ((w.toLong * ch * bpc + 7) / 8) * h
-          if rawLen > 0 && rawLen <= Int.MaxValue
-          payloadEnd <- {
-            if (lOpt.isDefined) {
-              val l = lOpt.get
-              (if (filters.isEmpty) Option(encodedAt(l))
-               else transportChain(encodedAt(l), filters, parms))
-                .filter(_.length == rawLen)
-                .map(d => (d, dataStart + l))
-            } else if (filters.isEmpty) {
-              if (dataStart + rawLen <= content.length)
-                Some((content.substring(dataStart, dataStart + rawLen.toInt)
-                  .getBytes(StandardCharsets.ISO_8859_1), dataStart + rawLen.toInt))
-              else None
-            } else {
-              // bounded EI-candidate scan: 16 tries covers any real
-              // payload whose bytes happen to spell ' EI' a few times
-              var tries = 0
-              var found: Option[(Array[Byte], Int)] = None
-              var from = dataStart
-              while (found.isEmpty && tries < 16 && eiM.find(from)) {
-                tries += 1
-                from = eiM.start + 1
-                found = transportChain(
-                  content.substring(dataStart, eiM.start)
-                    .getBytes(StandardCharsets.ISO_8859_1), filters, parms)
-                  .filter(_.length == rawLen)
-                  .map(d => (d, eiM.end))
-              }
-              found
-            }
-          }
-        } {
-          idx += 1
-          out += PdfImage(pageNo, s"BI#$idx", w, h, ch, "raw", payloadEnd._1, bpc)
-          next = payloadEnd._2
-        }
-      }
-      pos = next
+      pos = biM.end
+      for {
+        im <- inlineHeader(content, biM.end)
+        (end, decoded) <- inlineExtent(content, im)
+        bytes <- decoded
+        img <- im.toImage(pageNo, s"BI#${out.length + 1}", bytes)
+      } { out += img; pos = end }
     }
-    (out.toSeq, idx)
+    out.toSeq
   }
+
+  /** End (exclusive, just past the terminating `EI`) of the inline
+    * image whose `BI` token ends at `biEnd` — the content walkers'
+    * skip, so payload bytes can't execute as operators. The payload
+    * ends where [[inlineExtent]] puts it, and the walk resumes after
+    * the first whitespace-delimited `EI` from there. An undelimitable
+    * payload falls back to the first `EI` after `ID`; with no `ID` or
+    * no `EI` the rest of the stream drops — parsing binary as
+    * operators would corrupt the page's text state (skip beats
+    * garbage).
+    */
+  private def inlineImageEnd(stream: String, biEnd: Int): Int =
+    inlineHeader(stream, biEnd).fold(stream.length) { im =>
+      val from = inlineExtent(stream, im).fold(im.dataStart)(_._1)
+      // EiTokenRe wants the preceding whitespace in-match — back up one
+      // so a payload ending exactly at `from` with its EI delimiter
+      // space already consumed still matches
+      val eiM = EiTokenRe.pattern.matcher(stream)
+      if (eiM.find(math.max(0, from - 1))) eiM.end(1) else stream.length
+    }
 
   /** All images of the document, in page order — image XObjects first,
     * then the page's inline images (§8.9.7) — decrypted and
@@ -2118,169 +2130,170 @@ object Pdf {
     * split and the other images survive.
     */
   def extractImages(bytes: Array[Byte]): Seq[PdfImage] = {
-    val text = new String(bytes, StandardCharsets.ISO_8859_1)
-    val objects = preparedObjects(text)
-    val byNum = objects.map(o => o.num -> o).toMap
-    val out = ArrayBuffer.empty[PdfImage]
-    var pageNo = 0
-    for (o <- objects if isPageDict(o.dict)) {
-      pageNo += 1
-      for {
-        res <- resolvedResources(o.dict, byNum).toSeq
-        xo <- dictValue(res, "/XObject", byNum).toSeq
+    val doc = prepare(bytes)
+    doc.pages.zipWithIndex.flatMap { case (o, i) =>
+      val pageNo = i + 1
+      val xobjects = for {
+        res <- resolvedResources(o.dict, doc.byNum).toSeq
+        xo <- dictValue(res, "/XObject", doc.byNum).toSeq
         m <- FontEntryRefRe.findAllMatchIn(xo)
         n <- m.group(2).toIntOption
-        io <- byNum.get(n)
+        io <- doc.byNum.get(n)
         if io.dict.contains("/Image") && io.stream.isDefined
-        img <- decodeImage(pageNo, m.group(1), io, byNum)
-      } out += img
-      // inline images live in the page's content streams (same
-      // refs-or-inline resolution as the text split)
-      val contentRefs: Seq[PdfObj] = ContentsArrRe.findFirstMatchIn(o.dict) match {
-        case Some(arr) =>
-          RefRe.findAllMatchIn(arr.group(1)).flatMap(_.group(1).toIntOption)
-            .flatMap(byNum.get).toSeq
-        case None => ContentsRefRe.findFirstMatchIn(o.dict)
-          .flatMap(_.group(1).toIntOption).flatMap(byNum.get).toSeq
-      }
-      val streams = if (contentRefs.nonEmpty) contentRefs else Seq(o)
-      // BI#n numbering is per page, threaded across its streams —
-      // a multi-/Contents page must not produce colliding names
-      var biIdx = 0
-      for {
-        c <- streams
-        data <- c.stream.toSeq
-        decoded <- decodeContent(c.dict, data).toSeq
-      } {
-        val (imgs, nidx) = inlineImages(decoded, pageNo, biIdx)
-        biIdx = nidx
-        out ++= imgs
-      }
+        img <- decodeImage(pageNo, m.group(1), io, doc.byNum)
+      } yield img
+      xobjects ++ inlineImages(pageContent(o, doc.byNum), pageNo)
     }
-    out.toSeq
   }
 
-  /** Text of the `(…) Tj` / `[(…) -10 (…)] TJ` / `'` / `"` show-text
-    * operators of a decoded content stream, whitespace-joined,
-    * with PDF string escapes (\\, \(, \), \n, \t, octal) decoded.
-    *
-    * Content streams are postfix: operands accumulate on a stack until
-    * an operator consumes them. This scanner keeps the PENDING string
-    * operands (numbers/names/brackets are skipped) and, at each
-    * operator word, emits them if the operator is a show-text op and
-    * discards them otherwise — so every string of a multi-string
-    * `[…] TJ` array is kept (the round-2 first cut only kept the last
-    * one: the lookahead from an inner string stopped at the next '(').
-    */
-  def extractText(stream: String): String =
-    extractText(stream, Map.empty[String, PdfFont])
+  // ---------------------------------------------------------------
+  // Content reading: ONE tokenizer and ONE glyph decoder feed both
+  // interpreters — the plain text walker ([[extractText]]) and the
+  // positioned one ([[positionedChars]]).
+  // ---------------------------------------------------------------
 
-  /** Font-aware variant: `Tf` selects the current font from `fonts`
-    * (by the name operand preceding it); every string operand maps
-    * through that font's decode rules at push time. A font NAME that
-    * doesn't resolve keeps the legacy Latin-1 identity (the fixture /
-    * no-resources case); a RESOLVED Type0 font without a ToUnicode
-    * CMap suppresses its strings entirely — empty beats garbage.
+  /** A content-stream token (§7.2, §8.2): an operand, an array
+    * bracket, or an operator. Strings carry their raw code bytes as
+    * chars; glyph decoding happens in the interpreter, which knows the
+    * current font. `TArr` is the positioned walker's assembled array.
     */
-  def extractText(stream: String, fonts: Map[String, PdfFont]): String = {
-    val out = new StringBuilder
-    val pending = scala.collection.mutable.ArrayBuffer.empty[String]
-    var lastName = ""
-    var curFont: Option[PdfFont] = None
-    def emit(): Unit = {
-      for (s <- pending) {
-        if (out.nonEmpty) out.append(' ')
-        out.append(s)
-      }
-      pending.clear()
-    }
-    // map a raw byte-string (chars = code bytes) through the current
-    // font; None = suppressed
-    def mapped(raw: String): Option[String] = curFont match {
-      case None => Some(raw)
-      case Some(f) if f.isType0 =>
-        f.toUnicode match {
-          case None => None
-          case Some(cmap) =>
-            val sb = new StringBuilder
-            var k = 0
-            while (k + 1 < raw.length) {
-              val code = ((raw.charAt(k) & 0xff) << 8) | (raw.charAt(k + 1) & 0xff)
-              sb.append(cmap.getOrElse(code, ""))
-              k += 2
-            }
-            Some(sb.toString)
-        }
-      case Some(f) =>
-        val sb = new StringBuilder
-        for (ch <- raw) {
-          val code = ch.toInt & 0xff
-          f.toUnicode.flatMap(_.get(code)).orElse(f.differences.get(code))
-            .orElse(f.baseEncoding.get(code)) match {
-            case Some(s2) => sb.append(s2)
-            case None =>
-              // Latin-1 identity is only safe when the font carries NO
-              // ToUnicode CMap (the no-metadata legacy case). A font
-              // WITH a CMap that leaves a code unmapped is subsetted /
-              // symbolic — its raw code bytes are glyph indices, not
-              // characters, so emitting them would be garbage. Drop,
-              // matching the Type0 suppression contract.
-              if (f.toUnicode.isEmpty && !f.suppressUnmapped) sb.append(ch)
-          }
-        }
-        Some(sb.toString)
-    }
-    def push(raw: String): Unit =
-      mapped(raw).foreach(s => if (s.nonEmpty) pending += s)
-    def isDelim(c: Char): Boolean =
-      Character.isWhitespace(c) || "()<>[]{}/%".indexOf(c) >= 0
+  private sealed trait Tok
+  private final case class TNum(v: Double) extends Tok
+  private final case class TStr(s: String) extends Tok
+  private final case class TName(n: String) extends Tok
+  private final case class TOp(name: String) extends Tok
+  private case object TArrOpen extends Tok
+  private case object TArrClose extends Tok
+  private final case class TArr(items: Vector[Tok]) extends Tok
+
+  private def isDelim(c: Char): Boolean =
+    Character.isWhitespace(c) || "()<>[]{}/%".indexOf(c) >= 0
+
+  /** Tokenize a decoded content stream, feeding each token to `f` in
+    * order. Literal and hex strings decode their escapes; `<<…>>`
+    * dict operands (BDC/DP property lists) skip balanced, and an
+    * unterminated one ends the stream; comments
+    * are whitespace (§7.2.4) — a '(string)' inside one is not a live
+    * operand; operators are letter runs (plus `*`) and the
+    * single-char `'`/`"`. An inline image (`BI…ID…EI`) skips
+    * wholesale by [[inlineImageEnd]] and then surfaces as the `BI`
+    * operator, so binary payloads can't masquerade as operators.
+    */
+  private def lex(stream: String)(f: Tok => Unit): Unit = {
     var i = 0
     val n = stream.length
     while (i < n) {
       val c = stream.charAt(i)
       if (c == '(') {
         val (s, ni) = scanLiteralString(stream, i)
-        push(s)
-        i = ni
+        f(TStr(s)); i = ni
       } else if (c == '<') {
-        // hex string <4A6F> (or dict open <<): consume wholesale so its
-        // hex letters can't parse as operators and clear pending
-        if (i + 1 < n && stream.charAt(i + 1) == '<') i += 2
+        if (i + 1 < n && stream.charAt(i + 1) == '<')
+          i = balancedDict(stream, i).map(d => i + d.length).getOrElse(n)
         else {
+          // consumed wholesale so its hex letters can't parse as
+          // operators
           val (so, ni) = scanHexString(stream, i)
-          so.foreach(push)
+          so.foreach(s => f(TStr(s)))
           i = ni
         }
-      } else if (c == '\'' || c == '"') {
-        // single-char show-text operators (move-and-show)
-        emit(); i += 1
-      } else if (c == '%') {
-        // comments are whitespace (§7.2.4): a '(string)' inside one is
-        // comment text, not a pending show-text operand
+      } else if (c == '[') { f(TArrOpen); i += 1 }
+      else if (c == ']') { f(TArrClose); i += 1 }
+      else if (c == '%') {
         while (i < n && stream.charAt(i) != '\n' && stream.charAt(i) != '\r') i += 1
       } else if (c == '/') {
-        // name token: remember it so a following Tf can select the font
         val s = i + 1
         i += 1
         while (i < n && !isDelim(stream.charAt(i))) i += 1
-        lastName = stream.substring(s, i)
+        f(TName(stream.substring(s, i)))
+      } else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
+        PdfNumRe.findPrefixOf(stream.substring(i, math.min(n, i + 32))) match {
+          case Some(m) =>
+            m.toDoubleOption.foreach(v => f(TNum(v)))
+            i += m.length
+          case None => i += 1
+        }
+      } else if (c == '\'' || c == '"') {
+        f(TOp(c.toString)); i += 1
       } else if (c.isLetter) {
         val s = i
         while (i < n && (stream.charAt(i).isLetter || stream.charAt(i) == '*')) i += 1
         val op = stream.substring(s, i)
-        if (op == "Tj" || op == "TJ") emit()
-        else if (op == "BI") {
-          // inline image: skip by the extraction path's exact
-          // delimiting (same contract as the positioned walker) — a
-          // payload containing '(…) Tj' bytes must not emit phantom
-          // text, and a payload's ' EI ' run must not truncate it
-          i = inlineImageEnd(stream, i)
-          pending.clear()
-        } else {
-          if (op == "Tf") curFont = fonts.get(lastName)
-          pending.clear()
+        if (op == "BI") i = inlineImageEnd(stream, i)
+        f(TOp(op))
+      } else i += 1 // stray delimiters, whitespace: skip
+    }
+  }
+
+  private val Latin1Glyph: Array[String] = Array.tabulate(256)(_.toChar.toString)
+
+  /** Each glyph code of a shown string: two bytes per code under a
+    * Type0 (CID) font, one byte otherwise.
+    */
+  private def forEachCode(font: Option[PdfFont], raw: String)(f: Int => Unit): Unit =
+    if (font.exists(_.isType0)) {
+      var k = 0
+      while (k + 1 < raw.length) {
+        f(((raw.charAt(k) & 0xff) << 8) | (raw.charAt(k + 1) & 0xff))
+        k += 2
+      }
+    } else {
+      var k = 0
+      while (k < raw.length) { f(raw.charAt(k) & 0xff); k += 1 }
+    }
+
+  /** Unicode of one glyph code under `font`; "" = suppressed. No font
+    * (a name that didn't resolve — the fixture / no-resources case):
+    * Latin-1 identity. A Type0 font decodes through its ToUnicode
+    * CMap alone, so one WITHOUT a CMap suppresses (empty beats
+    * garbage). A simple font tries ToUnicode, then `/Differences`,
+    * then the base encoding; Latin-1 identity is only safe when the
+    * font carries NO ToUnicode CMap (the no-metadata legacy case) — a
+    * font WITH a CMap that leaves a code unmapped is subsetted /
+    * symbolic, its codes are glyph indices, not characters — and
+    * `suppressUnmapped` fonts (MacExpert) drop unmapped codes too.
+    */
+  private def glyphText(font: Option[PdfFont], code: Int): String = font match {
+    case None => Latin1Glyph(code)
+    case Some(f) if f.isType0 => f.toUnicode.flatMap(_.get(code)).getOrElse("")
+    case Some(f) =>
+      f.toUnicode.flatMap(_.get(code)).orElse(f.differences.get(code))
+        .orElse(f.baseEncoding.get(code)).getOrElse {
+          if (f.toUnicode.isEmpty && !f.suppressUnmapped) Latin1Glyph(code) else ""
         }
-      } else i += 1 // numbers, brackets, whitespace: skip
+  }
+
+  /** Text of the `(…) Tj` / `[(…) -10 (…)] TJ` / `'` / `"` show-text
+    * operators of a decoded content stream, whitespace-joined.
+    *
+    * Content streams are postfix: operands accumulate until an
+    * operator consumes them. This walker keeps the PENDING string
+    * operands (decoded through the current font at push time; numbers,
+    * names and brackets are skipped) and, at each operator, emits them
+    * if it is a show-text op and discards them otherwise — so every
+    * string of a multi-string `[…] TJ` array is kept. `Tf` selects the
+    * current font from `fonts` by the last name operand before it.
+    */
+  def extractText(stream: String, fonts: Map[String, PdfFont] = Map.empty): String = {
+    val out = new StringBuilder
+    val pending = ArrayBuffer.empty[String]
+    var lastName = ""
+    var curFont: Option[PdfFont] = None
+    lex(stream) {
+      case TStr(raw) =>
+        val sb = new StringBuilder
+        forEachCode(curFont, raw)(code => sb.append(glyphText(curFont, code)))
+        if (sb.nonEmpty) pending += sb.toString
+      case TName(nm) => lastName = nm
+      case TOp(op) =>
+        if (op == "Tj" || op == "TJ" || op == "'" || op == "\"")
+          for (s <- pending) {
+            if (out.nonEmpty) out.append(' ')
+            out.append(s)
+          }
+        else if (op == "Tf") curFont = fonts.get(lastName)
+        pending.clear()
+      case _ => ()
     }
     out.toString
   }
@@ -2288,8 +2301,8 @@ object Pdf {
   /** Scan a literal string whose `(` is at `start`; returns (decoded
     * chars, index after the closing paren). §7.3.4.2 escapes: named
     * escapes, octal (≤3 digits), `\`-EOL continuation; unescaped
-    * CR/CRLF normalize to ONE line feed. Shared by the plain text
-    * walker and the positioned walker so escape semantics can't drift.
+    * CR/CRLF normalize to ONE line feed; octal high-order overflow is
+    * ignored (`\777` is byte 0xFF), so every char is one code byte.
     */
   private def scanLiteralString(stream: String, start: Int): (String, Int) = {
     val n = stream.length
@@ -2315,7 +2328,7 @@ object Pdf {
             while (j < n && j < i + 4 && stream.charAt(j) >= '0' && stream.charAt(j) <= '7') {
               v = v * 8 + (stream.charAt(j) - '0'); j += 1
             }
-            sb.append(v.toChar); i = j
+            sb.append((v & 0xff).toChar); i = j
           case _ => sb.append(e); i += 2
         }
       } else if (ch == '(') { depth += 1; sb.append(ch); i += 1 }
@@ -2502,63 +2515,6 @@ object Pdf {
         defaultWidth = 500.0)
     }
 
-  /** End index (exclusive, just past the terminating `EI`) of an
-    * inline image whose `BI` token ends at `biEnd` — the POSITIONED
-    * walker's skip. Reuses the image-extraction path's delimiting
-    * rules in priority order: PDF-2.0 `/L` declared length; the exact
-    * computed length for UNFILTERED payloads (`ceil(w·ch·bpc/8)·h` —
-    * binary data may contain ' EI ' runs, so scanning first would
-    * truncate early and execute image bytes as text operators);
-    * otherwise the whitespace-delimited EI scan. Stream end when
-    * undelimitable — parsing binary as operators would corrupt the
-    * page's text state, so the tail drops, the image path's
-    * skip-beats-garbage contract.
-    */
-  private def inlineImageEnd(stream: String, biEnd: Int): Int = {
-    val idM = IdTokenRe.pattern.matcher(stream)
-    if (!idM.find(biEnd)) return stream.length
-    val parms = stream.substring(biEnd, idM.start)
-    val dataStart = idM.end
-    def afterEi(from: Int): Int = {
-      // EiTokenRe wants the preceding whitespace in-match — back up one
-      // so a payload ending exactly at `from` with its EI delimiter
-      // space already consumed still matches
-      val eiM = EiTokenRe.pattern.matcher(stream)
-      if (eiM.find(math.max(0, from - 1))) eiM.end(1) else stream.length
-    }
-    val lOpt = InlineLenRe.findFirstMatchIn(parms).flatMap(_.group(1).toIntOption)
-      .filter(l => l >= 0 && dataStart.toLong + l <= stream.length)
-    lOpt match {
-      case Some(l) => afterEi(dataStart + l)
-      case None =>
-        val unfiltered = InlineFilterRe.findFirstMatchIn(parms).isEmpty
-        def dim(key: String): Option[Int] =
-          InlineDimRe(key).findFirstMatchIn(parms).flatMap(_.group(1).toIntOption)
-        val isMask = boolParam(parms, "/IM") || boolParam(parms, "/ImageMask")
-        val ch: Option[Int] =
-          if (isMask) Some(1)
-          else InlineCsRe.findFirstMatchIn(parms).map(_.group(1)).flatMap {
-            case "/G" | "/DeviceGray" | "/I" | "/Indexed" => Some(1)
-            case "/RGB" | "/DeviceRGB" => Some(3)
-            case "/CMYK" | "/DeviceCMYK" => Some(4)
-            case _ => None
-          }
-        val exact: Option[Long] =
-          if (!unfiltered) None
-          else for {
-            w <- dim("w"); h <- dim("h")
-            bpc <- if (isMask) Some(1) else dim("bpc").orElse(Some(8))
-            c <- ch
-            len = ((w.toLong * c * bpc + 7) / 8) * h
-            if len > 0 && dataStart + len <= stream.length
-          } yield len
-        exact match {
-          case Some(len) => afterEi(dataStart + len.toInt)
-          case None => afterEi(dataStart)
-        }
-    }
-  }
-
   /** One positioned glyph in DEVICE space (PDF y-up, origin bottom
     * left); box = the em square on the baseline (y from baseline to
     * baseline+size — the approximation when no font-program
@@ -2580,16 +2536,10 @@ object Pdf {
     * the glyph box itself (em square on the baseline, see [[PChar]]).
     * Suppressed codes (unmapped subset/symbolic fonts) still ADVANCE
     * the cursor — their width is real even when their unicode isn't.
-    * Inline images (`BI…ID…EI`) skip wholesale so binary payloads
-    * can't masquerade as operators.
+    * Tokens come from the shared [[lex]], glyph text from
+    * [[glyphText]].
     */
   private[kernels] def positionedChars(stream: String, fonts: Map[String, PdfFont]): Vector[PChar] = {
-    sealed trait Tok
-    final case class TNum(v: Double) extends Tok
-    final case class TStr(s: String) extends Tok
-    final case class TName(n: String) extends Tok
-    final case class TArr(items: Vector[Tok]) extends Tok
-
     val out = Vector.newBuilder[PChar]
     // text state (§9.3); matrices as (a b c d e f) row-major 2x3,
     // row-vector convention: [x y 1]·M
@@ -2633,21 +2583,10 @@ object Pdf {
           if (idx >= 0 && idx < m.widths.length) m.widths(idx) else m.defaultWidth
         }
     }
-    // unicode of one code — the same decode rules as extractText's
-    // string mapper, applied per glyph; "" = suppressed (still advances)
-    def textOf(code: Int): String = curFont match {
-      case None => (code.toChar).toString
-      case Some(f) if f.isType0 =>
-        f.toUnicode.flatMap(_.get(code)).getOrElse("")
-      case Some(f) =>
-        f.toUnicode.flatMap(_.get(code)).orElse(f.differences.get(code))
-          .orElse(f.baseEncoding.get(code)).getOrElse {
-            if (f.toUnicode.isEmpty && !f.suppressUnmapped) code.toChar.toString else ""
-          }
-    }
     def emitGlyph(code: Int, isSpaceByte: Boolean): Unit = {
       val w0 = widthOf(code) / 1000.0
-      val txt = textOf(code)
+      // "" = suppressed: the glyph still advances
+      val txt = glyphText(curFont, code)
       if (txt.nonEmpty) {
         val gw = w0 * tfs * th
         val trm = mult(tm, ctm)
@@ -2669,21 +2608,11 @@ object Pdf {
       }
       advance((w0 * tfs + tc + (if (isSpaceByte) tw else 0.0)) * th)
     }
-    def show(raw: String): Unit =
-      if (curFont.exists(_.isType0)) {
-        var k = 0
-        while (k + 1 < raw.length) {
-          emitGlyph(((raw.charAt(k) & 0xff) << 8) | (raw.charAt(k + 1) & 0xff), isSpaceByte = false)
-          k += 2
-        }
-      } else {
-        var k = 0
-        while (k < raw.length) {
-          val code = raw.charAt(k) & 0xff
-          emitGlyph(code, isSpaceByte = code == 32)
-          k += 1
-        }
-      }
+    def show(raw: String): Unit = {
+      // word spacing applies to the single-byte code 32 only (§9.3.3)
+      val singleByte = !curFont.exists(_.isType0)
+      forEachCode(curFont, raw)(code => emitGlyph(code, isSpaceByte = singleByte && code == 32))
+    }
 
     val stack = ArrayBuffer.empty[Tok]
     var arrBuf: ArrayBuffer[Tok] = null // non-null while inside [ … ]
@@ -2752,64 +2681,17 @@ object Pdf {
       stack.clear()
     }
 
-    def isDelim(c: Char): Boolean =
-      Character.isWhitespace(c) || "()<>[]{}/%".indexOf(c) >= 0
-    var i = 0
-    val n = stream.length
-    while (i < n) {
-      val c = stream.charAt(i)
-      if (c == '(') {
-        val (s, ni) = scanLiteralString(stream, i)
-        pushTok(TStr(s)); i = ni
-      } else if (c == '<') {
-        if (i + 1 < n && stream.charAt(i + 1) == '<') {
-          // dict operand (BDC/DP property lists): skip balanced
-          i = balancedDict(stream, i).map(d => i + d.length).getOrElse(n)
-        } else {
-          val (so, ni) = scanHexString(stream, i)
-          so.foreach(s => pushTok(TStr(s)))
-          i = ni
-        }
-      } else if (c == '[') {
+    lex(stream) {
+      case TArrOpen =>
         if (arrDepth == 0) arrBuf = ArrayBuffer.empty[Tok]
         arrDepth += 1
-        i += 1
-      } else if (c == ']') {
+      case TArrClose =>
         if (arrDepth > 0) {
           arrDepth -= 1
           if (arrDepth == 0 && (arrBuf ne null)) { stack += TArr(arrBuf.toVector); arrBuf = null }
         }
-        i += 1
-      } else if (c == '%') {
-        // comments are whitespace (§7.2.4) — strings/numbers inside
-        // them must not become live operands
-        while (i < n && stream.charAt(i) != '\n' && stream.charAt(i) != '\r') i += 1
-      } else if (c == '/') {
-        val s = i + 1
-        i += 1
-        while (i < n && !isDelim(stream.charAt(i))) i += 1
-        pushTok(TName(stream.substring(s, i)))
-      } else if (c == '-' || c == '+' || c == '.' || c.isDigit) {
-        PdfNumRe.findPrefixOf(stream.substring(i, math.min(n, i + 32))) match {
-          case Some(m) =>
-            m.toDoubleOption.foreach(v => pushTok(TNum(v)))
-            i += m.length
-          case None => i += 1
-        }
-      } else if (c == '\'' || c == '"') {
-        op(c.toString); i += 1
-      } else if (c.isLetter) {
-        val s = i
-        while (i < n && (stream.charAt(i).isLetter || stream.charAt(i) == '*')) i += 1
-        val w = stream.substring(s, i)
-        if (w == "BI") {
-          // inline image: skip it with the extraction path's exact
-          // delimiting rules (see inlineImageEnd) so payload bytes
-          // can't execute as text operators or truncate the page
-          i = inlineImageEnd(stream, i)
-          stack.clear()
-        } else op(w)
-      } else i += 1
+      case TOp(name) => op(name)
+      case t => pushTok(t)
     }
     out.result()
   }
@@ -2872,8 +2754,7 @@ object Pdf {
 
   /** Positioned words of every page (reference `PdfPlumberTextDetector`,
     * extern/pdftext.py:90-107): the [[positionedChars]] walk over the
-    * page's concatenated content streams (§7.8.2: the split into
-    * streams is arbitrary — text state carries across), mapped to
+    * page's [[pageContent]], mapped to
     * top-origin DISPLAY coordinates (device flip by the inheritable
     * `/MediaBox` height — US Letter 792 when absent, corrupt files
     * degrade predictably — then the inheritable `/Rotate` quarter
@@ -2883,14 +2764,10 @@ object Pdf {
     * way a reader sees them.
     */
   def splitPagesWords(bytes: Array[Byte], xTol: Double = 3.0, yTol: Double = 3.0): Seq[PdfWord] = {
-    val text = new String(bytes, StandardCharsets.ISO_8859_1)
-    val objects = preparedObjects(text)
-    val byNum = objects.map(o => o.num -> o).toMap
+    val doc = prepare(bytes)
+    val byNum = doc.byNum
     val fontCache = scala.collection.mutable.HashMap.empty[Int, PdfFont]
-    val out = ArrayBuffer.empty[PdfWord]
-    var pageNo = 0
-    for (o <- objects if isPageDict(o.dict)) {
-      pageNo += 1
+    doc.pages.zipWithIndex.flatMap { case (o, i) =>
       val body = o.dict
       val fonts = fontsOf(body, byNum, fontCache)
       // full box, not just extents: a non-zero lower-left origin
@@ -2906,13 +2783,6 @@ object Pdf {
       val rot = inheritFromAncestors(body, byNum)(d =>
         RotateRe.findFirstMatchIn(d).flatMap(_.group(1).toIntOption))
         .map(r => ((r % 360) + 360) % 360).getOrElse(0)
-      val refs: Seq[Int] = ContentsArrRe.findFirstMatchIn(body) match {
-        case Some(arr) => RefRe.findAllMatchIn(arr.group(1)).flatMap(_.group(1).toIntOption).toSeq
-        case None => ContentsRefRe.findFirstMatchIn(body).flatMap(_.group(1).toIntOption).toSeq
-      }
-      val streams: Seq[String] =
-        (if (refs.nonEmpty) refs.flatMap(byNum.get) else Seq(o))
-          .flatMap(c => c.stream.flatMap(decodeContent(c.dict, _)))
       // device (PDF y-up) box → top-origin display box under /Rotate:
       // coordinates rebase to the MediaBox origin first, then the
       // quarter-turn image maps apply (90 CW: (X,Y)→(H−Y,X) in display
@@ -2927,12 +2797,10 @@ object Pdf {
           case _ => PChar(c.text, x0, pageH - y1, x1, pageH - y0)
         }
       }
-      val chars = positionedChars(streams.mkString("\n"), fonts).map(display)
-      groupWordsTop(chars, xTol, yTol).zipWithIndex.foreach {
-        case ((t, x0, top, x1, bottom), idx) =>
-          out += PdfWord(pageNo, idx, t, x0, top, x1, bottom)
+      val chars = positionedChars(pageContent(o, byNum), fonts).map(display)
+      groupWordsTop(chars, xTol, yTol).zipWithIndex.map {
+        case ((t, x0, top, x1, bottom), idx) => PdfWord(i + 1, idx, t, x0, top, x1, bottom)
       }
     }
-    out.toSeq
   }
 }

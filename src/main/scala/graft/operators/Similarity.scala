@@ -316,78 +316,17 @@ object Similarity {
   }
 }
 
-/** Self-contained XXH64 (public-domain algorithm, Yann Collet) over a
-  * string's UTF-8 bytes — used by kernels that need a fast 64-bit hash
-  * outside Column space.
+/** XXH64 over a string's UTF-8 bytes or a byte array — Spark's own
+  * implementation (the one behind the `xxhash64` column function),
+  * for kernels that need a fast 64-bit hash outside Column space.
   */
 object XxHash {
-  private val P1 = -7046029288634856825L // 11400714785074694791
-  private val P2 = -4417276706812531889L // 14029467366897019727
-  private val P3 = 1609587929392839161L
-  private val P4 = -8796714831421723037L // 9650029242287828579
-  private val P5 = 2870177450012600261L
-
   def hashUtf8(s: String, seed: Long): Long =
     hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), seed)
 
-  def hashBytes(input: Array[Byte], seed: Long): Long = {
-    val len = input.length
-    var idx = 0
-    var hash =
-      if (len >= 32) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        while (idx <= len - 32) {
-          v1 = round(v1, readLong(input, idx)); idx += 8
-          v2 = round(v2, readLong(input, idx)); idx += 8
-          v3 = round(v3, readLong(input, idx)); idx += 8
-          v4 = round(v4, readLong(input, idx)); idx += 8
-        }
-        var h = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
-          java.lang.Long.rotateLeft(v3, 12) + java.lang.Long.rotateLeft(v4, 18)
-        h = mergeRound(h, v1); h = mergeRound(h, v2)
-        h = mergeRound(h, v3); h = mergeRound(h, v4)
-        h
-      } else seed + P5
-    hash += len
-    while (idx <= len - 8) {
-      hash ^= round(0L, readLong(input, idx))
-      hash = java.lang.Long.rotateLeft(hash, 27) * P1 + P4
-      idx += 8
-    }
-    if (idx <= len - 4) {
-      hash ^= (readInt(input, idx) & 0xffffffffL) * P1
-      hash = java.lang.Long.rotateLeft(hash, 23) * P2 + P3
-      idx += 4
-    }
-    while (idx < len) {
-      hash ^= (input(idx) & 0xffL) * P5
-      hash = java.lang.Long.rotateLeft(hash, 11) * P1
-      idx += 1
-    }
-    hash ^= hash >>> 33
-    hash *= P2
-    hash ^= hash >>> 29
-    hash *= P3
-    hash ^= hash >>> 32
-    hash
-  }
-
-  private def round(acc: Long, in: Long): Long =
-    java.lang.Long.rotateLeft(acc + in * P2, 31) * P1
-
-  private def mergeRound(acc: Long, v: Long): Long =
-    (acc ^ round(0L, v)) * P1 + P4
-
-  private def readLong(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24) | ((b(i + 4) & 0xffL) << 32) | ((b(i + 5) & 0xffL) << 40) |
-      ((b(i + 6) & 0xffL) << 48) | ((b(i + 7) & 0xffL) << 56)
-
-  private def readInt(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
+  def hashBytes(input: Array[Byte], seed: Long): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      input, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, input.length, seed)
 }
 
 /** IVF (inverted-file) ANN — the classic coarse-quantizer scale path

@@ -229,10 +229,7 @@ object Serializers {
     */
   def readPdfPages(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.pdf")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
+    readFilesDir(spark, dir, "pdf", sort = false)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -251,10 +248,7 @@ object Serializers {
     */
   def readPdfWords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.pdf")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
+    readFilesDir(spark, dir, "pdf", sort = false)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -275,10 +269,7 @@ object Serializers {
     */
   def readPdfPageDocs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.pdf")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
+    readFilesDir(spark, dir, "pdf", sort = false)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>

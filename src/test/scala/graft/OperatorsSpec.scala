@@ -269,6 +269,83 @@ class SimilaritySpec extends AnyFunSuite {
     val local = strings.map(s => XxHash.hashUtf8(s, 42L)) // Spark's default seed is 42
     assert(fromSpark.toSeq == local)
   }
+
+  test("xxhash64 keeps the vectors of the former hand-rolled XXH64") {
+    // recorded from the self-contained XXH64 that XxHash carried before
+    // it delegated to Spark's: row = prefix length 0..64 of `base`,
+    // columns = seeds 0, 7, 42, 99, -1 — every stripe/tail branch
+    val base = Array.tabulate(64)(i => (i * 37 + 11).toByte)
+    val seeds = Seq(0L, 7L, 42L, 99L, -1L)
+    val expected: Array[Array[Long]] = Array(
+      Array(0xef46db3751d8e999L, 0x95f0626f6f0a4409L, 0x98b1582b0977e704L, 0x4bd2f5da96d170faL, 0x298f4c84b24f5380L),
+      Array(0xf592c0c7639c4cb6L, 0x6e24c178c5cc3e62L, 0x0ed0d6a13cc52e0aL, 0xc4abfe3fee5e46e8L, 0x40068883e9dd8859L),
+      Array(0x78f1ae91e3b05e99L, 0x3dc342d8e7659bbeL, 0x054cd9899094cf8fL, 0x0fdc2e1e13e65d8cL, 0x572b82cea5fc3334L),
+      Array(0x22c08528601d4f27L, 0x4faf03743c92a0cdL, 0x1d78b776eafa43d8L, 0xa44cb6207c33f474L, 0x0babdacfea5c0f63L),
+      Array(0xfb1e5cf2f1ae4d95L, 0x2dc798d3db8ef9aeL, 0x25ad71c276a88f81L, 0xdb9c8c4a07952eebL, 0x8d1c55d11990167dL),
+      Array(0x9d213eca1f68f273L, 0x83e64a3a246d78aaL, 0xdcd9883a8c894cc0L, 0xeb3c6291a75380dfL, 0xf1feafaeee40d61cL),
+      Array(0x0f28996d1449561eL, 0xa85ebdd162f6ed21L, 0x92e06afba65ab962L, 0xade85f4d2a41f4f6L, 0x1720e07376291b31L),
+      Array(0x5613ac510496c04eL, 0xc2c9705368e85fa0L, 0x23cef44b0ba08fbcL, 0x52cccf5f89e75a54L, 0xc704098163038854L),
+      Array(0x57cb2b7521f3e21aL, 0x5a1b04f5b4a3561fL, 0x48f76c205ce221a1L, 0xf2c836ed04ac906aL, 0xd097f8dff42a2a81L),
+      Array(0xc3f1d09775257b66L, 0x2c32501740cfd767L, 0x55b4abc5c2b49dddL, 0x211bad83f9fe917bL, 0xb3f583a26daaf57bL),
+      Array(0x920f407f474903ffL, 0xd5d8e884a0922b9bL, 0xf93480bb03076530L, 0x8ace3b9fe303c33dL, 0xff45a3ba99b72857L),
+      Array(0x1bef4539443a2d5aL, 0x07f411025f14793dL, 0x39ec4fd892a8cf2eL, 0x84a07396d1f5bc99L, 0x0f0473744e933751L),
+      Array(0x2f53b00266039e64L, 0x0e650167875f78a2L, 0xa12d5dcdb37a0d4dL, 0x92326b58001aa6f1L, 0x09387d3c5d0bf1c5L),
+      Array(0xaed0293a7bb13c7aL, 0x7c455bf064cf273eL, 0x164a8fff156b1435L, 0x133a50c759150c4fL, 0xab31ed512a370c8bL),
+      Array(0x393648aa0a97d46fL, 0x0bda6b53f5815e71L, 0x49230c5b0cdb7826L, 0xa8197a277288dfc2L, 0x35b6ceb93796e036L),
+      Array(0x90a9714eb00e8d29L, 0x6778ced2b352b991L, 0xfc984faf1ae788b1L, 0x6dd04c3d73b5422dL, 0x5259df9f10e06f49L),
+      Array(0xc6843cef99721174L, 0x1270ebda565cbf46L, 0x9cf687a398b1d145L, 0x78775c6b2c16b1c3L, 0x3bc469fec872d075L),
+      Array(0xf72e5e622b272ad6L, 0x9128a520eaa72c60L, 0x46a5e039a6f8fd87L, 0xbe1ee45a7ae095acL, 0xfb84742f1fb12c0fL),
+      Array(0xade42c5775a43c96L, 0x132dcbd1329e9defL, 0xea0ccdeaf0517c41L, 0x0c0f76ee1a66a2b8L, 0xbb8cce56b4f25f26L),
+      Array(0xc3bdab4626258ceaL, 0x543b93be70208c62L, 0xe1f77d10e4e7b2e9L, 0x6cae13ed1103197dL, 0xd45083c6b340cea6L),
+      Array(0xa62c18328d2d838dL, 0x5c871640c08cb255L, 0xec8ab7ab1db845ecL, 0x42093e01da0f494cL, 0x63730d3ce317a5fcL),
+      Array(0x2f04ff79d78f8827L, 0xd78d4e84ae19176aL, 0x2a36bc0faeaff689L, 0x3518c17d50af558eL, 0x956a41837799e1feL),
+      Array(0x1e5b0540defc3911L, 0xda4a01bb8d2ae181L, 0x46f01664f4e1857dL, 0x3050e3e95faa95dfL, 0x31f1470ff8de2519L),
+      Array(0x5e6a1fe05d7c06f8L, 0xb4784dcd1d9a24afL, 0x3997f3fde040b72bL, 0x3770de44b7a86d51L, 0x292190ad9059573bL),
+      Array(0xfa2d58b357e1565eL, 0x49fad8c1b41dcb82L, 0xf8bd9813fd31a206L, 0x6f0eaaf49ed70174L, 0x891fe2d924e0f344L),
+      Array(0x8adefb8c854b47a5L, 0x96b4cf9dbf821c7eL, 0xa55c7486ada63a2fL, 0x3cb0ef4b3281076fL, 0xee5ed182f560a2d5L),
+      Array(0x2b085f5f9da33210L, 0x337afa20f05aae44L, 0x07ce2545f7bdf5e6L, 0x42bb67711b0198c1L, 0x5563671ff5f5dbf1L),
+      Array(0x87b80516e95cbbbcL, 0x56e1b1c36b0b19cdL, 0xd2012309ceacdfcfL, 0xa811e389bd154a4cL, 0x16d533ffce8178b2L),
+      Array(0xff5c77ef1446f7e5L, 0x8fbcf942927181c2L, 0x46219a9acc2f5c02L, 0xf8604be9d4390a66L, 0xaab3866386dc71d0L),
+      Array(0x8b15b1001a84dbdbL, 0xcfd84611418df44aL, 0x9901b4e029b79d36L, 0xb6d6c7f4e05eb893L, 0x9d9aab3c511d61fdL),
+      Array(0x6077f1ac1f080751L, 0x91bd3ad4b40d5b3aL, 0x667a480fac2bbdfaL, 0x996e3d114a2b96b3L, 0x156fed783866b184L),
+      Array(0xe4a0e629e519a4aeL, 0x84caa0ef1a8b319dL, 0xb5ff3fef27553617L, 0xd6536e1e183dd6bdL, 0xad7f73b8b02137c7L),
+      Array(0xcc6b8aaada790b2dL, 0x45ff9053881a05cfL, 0x397cf7d12b7e438cL, 0x329ccfdae8d87920L, 0xca35ab19542aa4c2L),
+      Array(0x35ec49850475a832L, 0xa962d39e3908e764L, 0xe39469f42e2fd6e4L, 0x5a6e24faa4b2849eL, 0x2c26c5a2a1784255L),
+      Array(0xf56a57787fd5fe4eL, 0x16ca75314c7a1decL, 0x60a155e527670a07L, 0x674bd0160a23a43eL, 0x599557e0948551bbL),
+      Array(0x59de01e65b64555bL, 0x84ec9fbcaf7eb170L, 0x53b3bbc8cd79e906L, 0x3363feebf04ae428L, 0x85859fff530df4c2L),
+      Array(0xbebb6d8c24fb3cfaL, 0xa679385eced8772fL, 0x0b7f9c13a5b33501L, 0x3feb0bc8b42c322eL, 0xf92e676910e4be35L),
+      Array(0x5f313a6790502101L, 0xaadd88eef398e1a9L, 0xd9c3149a34c3576cL, 0x637bed217e2cec7cL, 0x35a09861881ebc6fL),
+      Array(0x9ffd421ba9cd1babL, 0xc4487de95c0a74ddL, 0xc30166a68f752e8aL, 0x0482832720f41444L, 0x71d3f8408ca480edL),
+      Array(0x22984e41b53c1210L, 0x57ada8cd0943ca78L, 0x9532d21e0bb9bb51L, 0xef54d22258076633L, 0x32dabb515d40a915L),
+      Array(0x3b21ed23eea85c2dL, 0x242d3a2f02755a8cL, 0xb0c82a4cd7b5bb7bL, 0xd417bae2f00158a5L, 0x7e969162bac9099eL),
+      Array(0x25c2b9e2f81a6a9dL, 0xb887e2b994c5c581L, 0x2ffd3cb279152a48L, 0x1ef956132f5222a0L, 0xa371619206e83beaL),
+      Array(0x126f6f74a01c7118L, 0x6e6454c66d50d549L, 0x175f2a5403f19c79L, 0x5390271f3c000ba5L, 0xe5f6edc6a880209eL),
+      Array(0x03c47edf3964bb63L, 0xe20774ac7116574eL, 0xb877d7c570ead8dcL, 0x12dbc816f7cdd4c7L, 0xd26d83aae79fe554L),
+      Array(0xa9a8f93ce6f588d3L, 0xe7a5fa15e68df370L, 0xd30a0107cc47c821L, 0x4e4f03f184174d4bL, 0x652ad91367e67937L),
+      Array(0xfc003d355fa58a61L, 0xdf37f0c15380bcdcL, 0x337d5c3ae602a491L, 0xba2ba22bd5dd6fb7L, 0x893342ab73e2d001L),
+      Array(0x2af21f2c679a3b30L, 0x7cf7f8c0e1f31f11L, 0xa7231ecc96160bceL, 0x40fac4474551c182L, 0xe6df1bacd8a37d20L),
+      Array(0x16fdd9ca22942ddaL, 0x94d78f9419e2ad00L, 0x98726cbea1005c0cL, 0xe5e976421f96444fL, 0xe9a498962666c1dbL),
+      Array(0xf6c2a2407a06c116L, 0x91e3c2140d0c6a25L, 0x86172441a17ec30dL, 0x8eb70e38ef1499f7L, 0x6b5b13a5ae508719L),
+      Array(0x1951edf80e0e88a1L, 0xb40e776b87f29012L, 0xeb8e6714c68d170cL, 0x101e6eb63f720299L, 0x7ad94b0e80da3799L),
+      Array(0x8966cf42dc674cb9L, 0x7f111aeada074d2eL, 0xd99bb58d2391772aL, 0x86b64f54cf92e382L, 0x377377a6d8af06f6L),
+      Array(0xca011706caf89aa3L, 0xb00a1f243e249f48L, 0x3a4f7f0c20398e0bL, 0x9b0b0fc5b05cab25L, 0x8e63af8e1e73093aL),
+      Array(0xc97263946e120e53L, 0x15c717c4dbcae961L, 0x2a5c3f5993f7fd0fL, 0x43edbf5327f3eac0L, 0xd8a6c9f3d24ec64cL),
+      Array(0xf540a55131f40746L, 0x3512307bb37a0866L, 0x81536cdaee4a963eL, 0x84bf12dfc750f9b6L, 0xe3e850eb36315abaL),
+      Array(0xab9a21d36f37bce2L, 0x46cf6e43ff35fce5L, 0x8748af330d364f4fL, 0x130729b8e884ce68L, 0xbc9d5c4d5fb3578eL),
+      Array(0x66a3eed6214e51ffL, 0xd710386de7917e50L, 0xab5791ca3f232668L, 0x46714971ae6c9488L, 0x9043274996ff098dL),
+      Array(0xd44977c91550cf3bL, 0x9334fcbcd7b4d3eaL, 0xee98b0811dadbe38L, 0xbebe9286eaf55415L, 0xd40021d572260cf6L),
+      Array(0x52f38f5975796217L, 0x83ac9ede68f6585aL, 0x312c9ffa2cea0bc8L, 0xc55116bfa4f50e7fL, 0x3c566a272f5c5a45L),
+      Array(0x9996904218108a75L, 0xf47e0b14a12d07ebL, 0x24568d77540fe3d6L, 0x4442119a58892566L, 0x5a03eada800fca73L),
+      Array(0xd8213a1477e2e240L, 0x032e719ce573b48aL, 0xec674a380b9d73baL, 0xe25d2c1c724b8a29L, 0x732e17033a990bc0L),
+      Array(0x2bafa54dfa33d5a4L, 0xad93b4e158a0dff0L, 0x6a9bbbbb5d83f093L, 0xa5f35b9be89cef85L, 0x426c3132b42b1e2dL),
+      Array(0xcdc4536663934e01L, 0xe9e70f9f4e30b74bL, 0x0f8f4c94c2c94b47L, 0xaacb0e293cc1cf1eL, 0x8e8496794aeaf5ccL),
+      Array(0x57b94e18c6b9173fL, 0x73fec76fafc984e0L, 0x67febc1371ded1adL, 0x543ca78ad0ba6cdbL, 0x4eba2366108424deL),
+      Array(0xbf9f0ba3cf95b28aL, 0xa3507c0831f26132L, 0xd61515af63d708d1L, 0x66fff132f6efbc0fL, 0xa7d7e3df148b1142L),
+      Array(0x155ccce4bf32befcL, 0xcd7131c8f9d8ea80L, 0xd86cde23b501d126L, 0x267c4593c5ece92bL, 0xfb41f87c873380aaL))
+    for (len <- 0 to 64; (seed, k) <- seeds.zipWithIndex)
+      assert(XxHash.hashBytes(java.util.Arrays.copyOf(base, len), seed) == expected(len)(k),
+        s"length $len seed $seed")
+  }
 }
 
 class TextStatsSpec extends AnyFunSuite {

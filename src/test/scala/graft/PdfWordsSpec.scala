@@ -351,4 +351,81 @@ class PdfWordsSpec extends AnyFunSuite {
       "BI /W 2 /H 2 /CS /G /BPC 8 /F /Fl ID ÿ(phantom)þTj")
     assert(ws.map(_.text) == Seq("A"))
   }
+
+  /** A one-page PDF whose page (object 3) lists `streams` as its
+    * `/Contents` array (objects 10, 11, …) over /F1 -> `fontDict`
+    * (object 5) plus `extraObjs`.
+    */
+  private def multiStreamPage(streams: Seq[Array[Byte]], fontDict: String,
+      extraObjs: String = ""): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def put(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
+    val refs = streams.indices.map(i => s"${10 + i} 0 R").mkString(" ")
+    put("%PDF-1.4\n1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
+    put("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >> endobj\n")
+    put("3 0 obj << /Type /Page /Parent 2 0 R " +
+      s"/Resources << /Font << /F1 5 0 R >> >> /Contents [$refs] >> endobj\n")
+    put(s"5 0 obj $fontDict endobj\n")
+    put(extraObjs)
+    for ((c, i) <- streams.zipWithIndex) {
+      put(s"${10 + i} 0 obj << /Length ${c.length} >> stream\n")
+      out.write(c)
+      put("\nendstream endobj\n")
+    }
+    put("%%EOF\n")
+    out.toByteArray
+  }
+
+  test("a Type0 font set in one content stream decodes the next stream's codes (§7.8.2)") {
+    val font = "<< /Type /Font /Subtype /Type0 /Encoding /Identity-H /ToUnicode 6 0 R >>"
+    val cmap = "1 begincodespacerange <0000> <FFFF> endcodespacerange " +
+      "1 beginbfrange <0000> <00FF> <0000> endbfrange"
+    val bytes = multiStreamPage(
+      Seq("BT /F1 10 Tf 100 500 Td", "<00480069> Tj ET").map(_.getBytes(ISO_8859_1)), font,
+      s"6 0 obj << /Length ${cmap.length} >> stream\n$cmap\nendstream endobj\n")
+    assert(Pdf.splitPages(bytes).map(_.text) == Seq("Hi"))
+    val ws = Pdf.splitPagesWords(bytes)
+    assert(ws.map(_.text) == Seq("Hi"))
+    // no /DescendantFonts: each CID advances the 1000-unit default
+    assertBox(ws.head, "Hi", 100.0, 282.0, 120.0, 292.0)
+  }
+
+  test("an array colour space delimits an inline image exactly for text, words and images") {
+    // [/I /RGB 1 <…>] is indexed: 9x1 at 8 bpc = 9 payload bytes,
+    // which spell ' EI (Z)Tj' — the first ' EI ' is image data
+    val payload = " EI (Z)Tj"
+    val content = "BT /F1 10 Tf 100 500 Td (A) Tj ET " +
+      s"BI /W 9 /H 1 /CS [/I /RGB 1 <000000FFFFFF>] /BPC 8 ID $payload EI " +
+      "BT /F1 10 Tf 200 500 Td (B) Tj ET"
+    val bytes = onePage(content)
+    assert(Pdf.splitPages(bytes).map(_.text) == Seq("A B"))
+    assert(Pdf.splitPagesWords(bytes).map(_.text) == Seq("A", "B"))
+    val imgs = Pdf.extractImages(bytes)
+    assert(imgs.map(i => (i.name, i.width, i.height, i.channels)) == Seq(("BI#1", 9, 1, 1)))
+    assert(new String(imgs.head.data, ISO_8859_1) == payload)
+  }
+
+  test("a bare inline JPEG whose body spells ' EI ' delimits by its marker structure everywhere") {
+    val img = new java.awt.image.BufferedImage(6, 4, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    for (y <- 0 until 4; x <- 0 until 6) img.setRGB(x, y, (x * 41 + y * 97) * 30000)
+    val jb = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpg", jb)
+    val jpeg0 = jb.toByteArray
+    // a COM segment right after SOI whose text is ' EI (Z)Tj': the
+    // marker walk steps over it by its declared length
+    val com = " EI (Z)Tj".getBytes(ISO_8859_1)
+    val jpeg = jpeg0.take(2) ++ Array(0xff.toByte, 0xfe.toByte, 0.toByte, (com.length + 2).toByte) ++
+      com ++ jpeg0.drop(2)
+    val content = new java.io.ByteArrayOutputStream()
+    content.write(("BT /F1 10 Tf 100 500 Td (A) Tj ET " +
+      "q BI /W 6 /H 4 /CS /RGB /BPC 8 /F /DCT ID ").getBytes(ISO_8859_1))
+    content.write(jpeg)
+    content.write(" EI Q BT /F1 10 Tf 200 500 Td (B) Tj ET".getBytes(ISO_8859_1))
+    val bytes = onePage(new String(content.toByteArray, ISO_8859_1))
+    assert(Pdf.splitPages(bytes).map(_.text) == Seq("A B"))
+    assert(Pdf.splitPagesWords(bytes).map(_.text) == Seq("A", "B"))
+    val imgs = Pdf.extractImages(bytes)
+    assert(imgs.map(i => (i.name, i.width, i.height, i.format)) == Seq(("BI#1", 6, 4, "jpeg")))
+    assert(imgs.head.data.sameElements(jpeg))
+  }
 }
