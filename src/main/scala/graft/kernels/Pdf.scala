@@ -118,6 +118,7 @@ object Pdf {
     }.toMap
     val out = Vector.newBuilder[PdfObj]
     val m = HeaderRe.matcher(s)
+    val next = HeaderRe.matcher(s)
     var p = 0
     var go = p < s.length && m.find(p)
     while (go) {
@@ -133,9 +134,23 @@ object Pdf {
       // per spec it follows the dict close '>>' (optional whitespace
       // between) and is itself followed by CRLF or LF
       val streamKw = findStreamKeyword(s, bodyStart)
+      val isStream = streamKw >= 0 && streamKw < endobj0
+      // a damaged `endobj`: the next object's header comes before this
+      // object's end (or its stream keyword), so the object ends there
+      // and the next one is scanned in its own right instead of being
+      // swallowed (its stream taken for this dict's, its number lost)
+      val nextHdr =
+        if (num < 0 || endobj0 < 0) -1
+        else {
+          next.region(bodyStart, if (isStream) streamKw else endobj0)
+          if (next.find()) next.start else -1
+        }
       if (num < 0) go = m.find(bodyStart)
       else if (endobj0 < 0) go = false
-      else if (streamKw < 0 || streamKw > endobj0) {
+      else if (nextHdr >= 0) {
+        out += PdfObj(num, off, s.substring(bodyStart, nextHdr), None, gen)
+        go = m.find(nextHdr)
+      } else if (!isStream) {
         out += PdfObj(num, off, s.substring(bodyStart, endobj0), None, gen)
         go = m.find(endobj0 + 6)
       } else {
@@ -2172,7 +2187,9 @@ object Pdf {
   /** Tokenize a decoded content stream, feeding each token to `f` in
     * order. Literal and hex strings decode their escapes; `<<…>>`
     * dict operands (BDC/DP property lists) skip balanced, and an
-    * unterminated one ends the stream; comments
+    * unterminated `<<` skips alone (as does every later one, which
+    * keeps the scan linear), so the operators after it still read;
+    * comments
     * are whitespace (§7.2.4) — a '(string)' inside one is not a live
     * operand; operators are letter runs (plus `*`) and the
     * single-char `'`/`"`. An inline image (`BI…ID…EI`) skips
@@ -2182,15 +2199,20 @@ object Pdf {
   private def lex(stream: String)(f: Tok => Unit): Unit = {
     var i = 0
     val n = stream.length
+    var unbalanced = false
     while (i < n) {
       val c = stream.charAt(i)
       if (c == '(') {
         val (s, ni) = scanLiteralString(stream, i)
         f(TStr(s)); i = ni
       } else if (c == '<') {
-        if (i + 1 < n && stream.charAt(i + 1) == '<')
-          i = balancedDict(stream, i).map(d => i + d.length).getOrElse(n)
-        else {
+        if (i + 1 < n && stream.charAt(i + 1) == '<') {
+          // after one unterminated `<<`, a balanced scan from each
+          // later `<<` would re-read the rest of the stream
+          val d = if (unbalanced) None else balancedDict(stream, i)
+          if (d.isEmpty) unbalanced = true
+          i += d.fold(2)(_.length)
+        } else {
           // consumed wholesale so its hex letters can't parse as
           // operators
           val (so, ni) = scanHexString(stream, i)

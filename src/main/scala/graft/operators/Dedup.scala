@@ -11,7 +11,11 @@ import org.apache.spark.sql.functions._
   * PAIRS (a tiny fraction) are verified. Signatures come from typed
   * one-pass Scala kernels ([[minhashSig]], SimHash's mapPartitions):
   * nested Column `transform` lambdas re-evaluate the shingle subtree
-  * once per hash slot, which Catalyst cannot CSE away.
+  * once per hash slot, which Catalyst cannot CSE away. The MinHash
+  * kernel also emits each row's LSH band keys, and every MinHash-LSH
+  * operator materializes that `(id, sig, bands)` frame once per call
+  * (an eager `localCheckpoint` job at call time), so the kernel runs
+  * once per input row however many joins read the frame.
   */
 object Dedup {
 
@@ -60,14 +64,8 @@ object Dedup {
     * instead of the Column-space O(numHashes × full-shingle-recompute).
     * Null text signs as empty text.
     */
-  def minhashSig(text: String, k: Int, numHashes: Int): Array[Long] =
-    shingleSig(shinglesOf(if (text == null) "" else text, k), numHashes)
-
-  /** The [[minhashSig]] kernel over an already-built shingle array, so
-    * a row that needs both its shingles and its signature builds the
-    * shingles once. */
-  private def shingleSig(sh: Array[String], numHashes: Int): Array[Long] = {
-    val base = sh.map(s => XxHash.hashUtf8(s, 42L))
+  def minhashSig(text: String, k: Int, numHashes: Int): Array[Long] = {
+    val base = shinglesOf(if (text == null) "" else text, k).map(s => XxHash.hashUtf8(s, 42L))
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < numHashes) {
@@ -85,23 +83,59 @@ object Dedup {
     sig
   }
 
-  /** (id, signature, shingles) per row via one typed pass. */
+  /** Band keys of one signature: band b (0-based) hashes the decimal
+    * text of slots [b·r, b·r + r), comma-joined, with XXH64 seed 42,
+    * then hashes the int b into that — bit-identical to Spark's
+    * `xxhash64(concat_ws(",", slice(sig, b·r + 1, r)), b)`, the
+    * banding expression DedupSpec and perfbench's band-bucket probe
+    * restate.
+    */
+  private def bandHashes(sig: Array[Long], bands: Int, rowsPerBand: Int): Array[Long] = {
+    val out = new Array[Long](bands)
+    val sb = new java.lang.StringBuilder
+    var b = 0
+    while (b < bands) {
+      sb.setLength(0)
+      var j = 0
+      while (j < rowsPerBand) {
+        if (j > 0) sb.append(',')
+        sb.append(sig(b * rowsPerBand + j))
+        j += 1
+      }
+      out(b) = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b,
+        XxHash.hashUtf8(sb.toString, 42L))
+      b += 1
+    }
+    out
+  }
+
+  /** `(id, sig, bands)` per row via one typed pass: the MinHash
+    * kernel and the band keys of every LSH consumer. Each caller
+    * stores it once per call with an eager `localCheckpoint(true)`,
+    * the [[checkpointObserved]] lifecycle without a metric. */
   private def signatures(df: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int): DataFrame = {
+      k: Int, numHashes: Int, bands: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val rowsPerBand = numHashes / bands
     df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        val sh = shinglesOf(if (t == null) "" else t, k)
-        (id, shingleSig(sh, numHashes), sh)
+        val sig = minhashSig(t, k, numHashes)
+        (id, sig, bandHashes(sig, bands, rowsPerBand))
       })
-      .toDF("id", "sig", "sh")
+      .toDF("id", "sig", "bands")
   }
 
   /** LSH near-duplicate pairs via banded MinHash: band-bucket join on
     * (band, bandHash), then signature-agreement Jaccard estimate.
     * Returns (id_a, id_b, jaccard_est) with id_a < id_b.
+    *
+    * One signature pass per call: the `(id, sig, bands)` frame is
+    * stored by an eager `localCheckpoint(true)` (one job at call time)
+    * and feeds both band-join sides and both verify joins. A lost
+    * executor loses those blocks with no lineage to recompute them —
+    * the local-mode failure semantics of every localCheckpoint here.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -109,17 +143,15 @@ object Dedup {
     minhashLshPairsImpl(df, idCol, textCol, k, numHashes, bands, jaccardThreshold,
       persistSigs = false)._1
 
-  /** [[minhashLshPairs]] with the signature table PERSISTED and
-    * returned — callers that materialize the pairs (persist + count)
-    * must then `sigs.unpersist()`: at 10⁷-doc scale the ~0.5 KB/doc
-    * signature cache is multiple GB of storage that nothing downstream
-    * of the materialized pairs reads (the dedup_at_scale bench
-    * overflowed its spill volume holding two corpus sizes' caches
-    * concurrently). The no-handle [[minhashLshPairs]] deliberately
-    * does NOT persist — a cache entry nobody can release would leak
-    * one signature table per call in a long-running pipeline; it
-    * recomputes the (map-only, shuffle-free) signature stage for each
-    * of its three consumers instead.
+  /** [[minhashLshPairs]] with the signature frame `(id, sig, bands)`
+    * PERSISTED and returned instead of checkpointed — callers that
+    * materialize the pairs (persist + count) must then
+    * `sigs.unpersist()`: at 10⁷-doc scale the ~0.65 KB/doc signature
+    * cache is multiple GB of storage that nothing downstream of the
+    * materialized pairs reads (the dedup_at_scale bench overflowed its
+    * spill volume holding two corpus sizes' caches concurrently). The
+    * cache is filled by the first job over the pairs, once per
+    * partition, and every consumer reads it.
     */
   def minhashLshPairsWithSigs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -130,13 +162,12 @@ object Dedup {
   private def minhashLshPairsImpl(df: DataFrame, idCol: String, textCol: String,
       k: Int, numHashes: Int, bands: Int, jaccardThreshold: Double,
       persistSigs: Boolean): (DataFrame, DataFrame) = {
-    val sigs0 = signatures(df, idCol, textCol, k, numHashes).select("id", "sig")
+    val sigs0 = signatures(df, idCol, textCol, k, numHashes, bands)
     val sigs =
       if (persistSigs) sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigs0
+      else sigs0.localCheckpoint(true)
 
-    val cand = sigAgreement(bandCandidates(bandKeys(sigs, numHashes, bands)),
-      "id_a", sigs, "id_b", sigs)
+    val cand = sigAgreement(bandCandidates(bandKeys(sigs)), "id_a", sigs, "id_b", sigs)
     val pairs = cand.select(col("id_a"), col("id_b"),
         (col("agree").cast("double") / numHashes).as("jaccard_est"))
       .filter(col("jaccard_est") >= jaccardThreshold)
@@ -156,21 +187,17 @@ object Dedup {
     */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame =
-    bandCandidates(bandKeys(signatures(df, idCol, textCol, k, numHashes), numHashes, bands))
+    bandCandidates(bandKeys(
+      signatures(df, idCol, textCol, k, numHashes, bands).localCheckpoint(true)))
 
-  /** `(id, band, band_hash)` rows of a signature frame — THE banding
-    * expression (xxhash64 over each band's signature slice, seeded by
-    * the band index), shared by every LSH consumer so band keys can't
-    * drift between the self-join, the pairs path, and the incremental
-    * history probe.
+  /** `(id, band, band_hash)` rows of a signature frame: its kernel-built
+    * `bands` column exploded — shared by every LSH consumer so band
+    * keys can't drift between the self-join, the pairs path, and the
+    * incremental history probe.
     */
-  private def bandKeys(withSig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    withSig.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))), b))))
+  private def bandKeys(withBands: DataFrame): DataFrame =
+    withBands.select(col("id"), posexplode(col("bands")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-  }
 
   /** THE band self-join of the LSH family: `(id, band, band_hash)`
     * rows → distinct `(id_a, id_b)` pairs, `id_a < id_b`, that share a
@@ -210,8 +237,8 @@ object Dedup {
   def minhashLshExactPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       jaccardThreshold: Double = 0.95): DataFrame = {
-    val withSh = signatures(df, idCol, textCol, k, numHashes)
-    val cand = bandCandidates(bandKeys(withSh, numHashes, bands))
+    val sigs = signatures(df, idCol, textCol, k, numHashes, bands).localCheckpoint(true)
+    val cand = bandCandidates(bandKeys(sigs))
 
     // The exact shingle-set verify is the expensive stage: Spark
     // evaluates array_intersect on string arrays interpreted (per-pair
@@ -243,14 +270,18 @@ object Dedup {
     //  2. |A ∪ B| = |A| + |B| − |A ∩ B| (exact: shingle arrays are
     //     distinct sets by construction) — array_union evaluation
     //     dropped outright, halving the per-surviving-pair set work.
-    val sigs = withSh.select(col("id"), col("sig"))
+    // The shingle arrays come from their own shingles-only pass over
+    // the input (null text shingles as empty text, like the kernel):
+    // storing them in the materialized signature frame would hold
+    // every document's shingle strings for the survivors' sake.
     val prefiltered =
       if (jaccardThreshold >= 0.93 && numHashes >= 64)
         sigAgreement(cand, "id_a", sigs, "id_b", sigs)
           .filter(col("agree") >= lit(((jaccardThreshold - 0.25) * numHashes).ceil.toInt))
           .select("id_a", "id_b")
       else cand
-    val shingled = withSh.select(col("id"), col("sh"))
+    val shingled = df.select(col(idCol).cast("long").as("id"),
+      shingleArrUdf(coalesce(col(textCol), lit("")), lit(k)).as("sh"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
     prefiltered
       .join(shingled.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -564,23 +595,26 @@ object Dedup {
     * `(idCol, is_neardup, hist_id)` with `hist_id` the BEST matching
     * history document (max agreement, ties to the lowest id) or null.
     *
-    * Scale shape: both sides band map-only; the probe is ONE
-    * (band, hash) equi-join whose shuffled rows carry three scalars;
-    * verification re-acquires signatures by id-keyed joins only for
-    * the candidates (the pairs-path discipline). A standing ingest
-    * loop should materialize the history's banded keys once and reuse
-    * them across batches — this one-shot shape recomputes them, which
-    * is the right call for a daily batch and the wrong one inside a
-    * per-minute foreachBatch (note for callers).
+    * Scale shape: each side's `(id, sig, bands)` frame is
+    * materialized once per call (one eager job per side, the
+    * [[minhashLshPairs]] lifecycle) and feeds both the probe and the
+    * verify; the probe is ONE (band, hash) equi-join whose shuffled
+    * rows carry three scalars; verification re-acquires signatures by
+    * id-keyed joins only for the candidates (the pairs-path
+    * discipline). A standing ingest loop should keep the history's
+    * banded keys across batches — this one-shot shape signs the
+    * history once per call, which is the right call for a daily batch
+    * and the wrong one inside a per-minute foreachBatch (note for
+    * callers).
     */
   def incrementalNearDup(batch: DataFrame, history: DataFrame, idCol: String,
       textCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       jaccardThreshold: Double = 0.8): DataFrame = {
-    val batchSigs = signatures(batch, idCol, textCol, k, numHashes).select("id", "sig")
-    val histSigs = signatures(history, idCol, textCol, k, numHashes).select("id", "sig")
-    val cand = bandKeys(batchSigs, numHashes, bands)
+    val batchSigs = signatures(batch, idCol, textCol, k, numHashes, bands).localCheckpoint(true)
+    val histSigs = signatures(history, idCol, textCol, k, numHashes, bands).localCheckpoint(true)
+    val cand = bandKeys(batchSigs)
       .select(col("band"), col("band_hash"), col("id").as("batch_id"))
-      .join(bandKeys(histSigs, numHashes, bands)
+      .join(bandKeys(histSigs)
         .select(col("band"), col("band_hash"), col("id").as("hist_id")),
         Seq("band", "band_hash"))
       .select("batch_id", "hist_id").distinct()

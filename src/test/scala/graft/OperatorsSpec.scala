@@ -16,6 +16,47 @@ class DedupSpec extends AnyFunSuite with org.scalatest.PrivateMethodTester {
     d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
   }
 
+  /** The LSH banding expression in Column space: band b hashes the
+    * comma-joined decimal text of its signature slice, seeded by b. */
+  private def sqlBands(sig: org.apache.spark.sql.Column, numHashes: Int, bands: Int) = {
+    val r = numHashes / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(concat_ws(",", slice(sig, b * r + 1, lit(r))), b))
+  }
+
+  /** Stages that ran a typed `mapPartitions` (the signature kernel's
+    * operator; nothing else in the LSH plans is one) among the jobs
+    * `body` starts from this thread. */
+  private def kernelStages(body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"kernel-stages-${System.nanoTime()}"
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group && e.stageInfo.rddInfos.exists(_.scope.exists(_.name == "MapPartitions")))
+          stages.incrementAndGet()
+        if (g == group + "-end") drained.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "kernel stage count")
+      body
+      // listener events arrive in order: once the marker job's stage is
+      // seen, every stage of `body` has been seen
+      sc.setJobGroup(group + "-end", "kernel stage count marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    stages.get()
+  }
+
   test("minhash LSH finds every exact duplicate with jaccard 1.0") {
     val pairs = Dedup.minhashLshExactPairs(docsWithDups, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -61,7 +102,7 @@ class DedupSpec extends AnyFunSuite with org.scalatest.PrivateMethodTester {
     assert(Dedup.shinglesOf("ab", 3).toSeq == Seq("ab"))
   }
 
-  test("signature rows shingle once and stay bit-identical to minhashSig") {
+  test("signature rows stay bit-identical to minhashSig and carry the SQL band keys") {
     import spark.implicits._
     // the per-slot MinHash loop, restated: XXH64 (seed 42) per shingle,
     // then a xorshift-multiply re-seed per slot, minimum per slot
@@ -92,16 +133,62 @@ class DedupSpec extends AnyFunSuite with org.scalatest.PrivateMethodTester {
     assert(supp.exists(_.codePoints().anyMatch(Character.isSupplementaryCodePoint)))
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val signatures = PrivateMethod[org.apache.spark.sql.DataFrame](Symbol("signatures"))
-    val rows = (Dedup invokePrivate signatures(df, "doc_id", "text", 3, 64))
-      .as[(Long, Array[Long], Array[String])].collect()
+    val rows = (Dedup invokePrivate signatures(df, "doc_id", "text", 3, 64, 16))
+      .select(col("id"), col("sig"), col("bands"), sqlBands(col("sig"), 64, 16).as("sql"))
+      .as[(Long, Array[Long], Array[Long], Array[Long])].collect()
     assert(rows.length == texts.length)
-    for ((id, sig, sh) <- rows) {
+    for ((id, sig, bands, sql) <- rows) {
       val t = texts(id.toInt)
       val ref = reference(t, 3, 64)
       assert(java.util.Arrays.equals(sig, ref), s"row $id: frame signature")
       assert(java.util.Arrays.equals(Dedup.minhashSig(t, 3, 64), ref), s"row $id: minhashSig")
-      assert(sh.toSeq == Dedup.shinglesOf(if (t == null) "" else t, 3).toSeq, s"row $id: shingles")
+      assert(java.util.Arrays.equals(bands, sql), s"row $id: band keys")
     }
+  }
+
+  test("kernel band keys equal the SQL banding expression on extreme signatures") {
+    import spark.implicits._
+    val bandHashes = PrivateMethod[Array[Long]](Symbol("bandHashes"))
+    val rnd = new scala.util.Random(23)
+    val edges = Array(Long.MinValue, Long.MaxValue, Long.MinValue + 1, Long.MaxValue - 1, -1L, 0L, 1L)
+    def slot(): Long = rnd.nextInt(4) match {
+      case 0 => edges(rnd.nextInt(edges.length))
+      case 1 => -rnd.nextInt(100000).toLong
+      case _ => rnd.nextLong()
+    }
+    // the default shape, a shorter one, and one whose bands leave slots over
+    for ((numHashes, bands) <- Seq((64, 16), (32, 8), (64, 10))) {
+      val sigs = Vector.fill(400)(Array.fill(numHashes)(slot())) :+
+        Array.fill(numHashes)(Long.MinValue) :+ Array.fill(numHashes)(Long.MaxValue)
+      val want = sigs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "sig")
+        .select(col("id"), sqlBands(col("sig"), numHashes, bands).as("sql"))
+        .as[(Long, Array[Long])].collect()
+      assert(want.length == sigs.length)
+      for ((id, sql) <- want) {
+        val got = Dedup invokePrivate bandHashes(sigs(id.toInt), bands, numHashes / bands)
+        assert(java.util.Arrays.equals(got, sql), s"$numHashes/$bands row $id")
+      }
+    }
+  }
+
+  test("exact pairs shingle null text as empty text, like the signature kernel") {
+    import spark.implicits._
+    val d = Seq((1L, null: String), (2L, ""), (3L, null: String), (4L, "some other words"))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.minhashLshExactPairs(d, "doc_id", "text")
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(pairs == Seq((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0)))
+  }
+
+  test("each LSH call runs the signature kernel in one stage per input") {
+    val d = docsWithDups
+    def lsh(f: => org.apache.spark.sql.DataFrame): Int = kernelStages(f.collect())
+    assert(lsh(Dedup.minhashLshPairs(d, "doc_id", "text")) == 1)
+    assert(lsh(Dedup.minhashLshExactPairs(d, "doc_id", "text")) == 1)
+    assert(lsh(Dedup.minhashLshCandidates(d, "doc_id", "text")) == 1)
+    // one per side: the batch and the history each sign once
+    assert(lsh(Dedup.incrementalNearDup(d.filter(col("doc_id") >= 10000),
+      d.filter(col("doc_id") < 10000), "doc_id", "text")) == 2)
   }
 
   test("signature-agreement prefilter only engages at numHashes >= 64") {

@@ -184,6 +184,23 @@ class PdfFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("a damaged endobj ends its object at the next header; the next object survives") {
+    // the `inline` base with the page object's `endobj` overwritten —
+    // the shape of mutants inline#108 and inline#197: the page must
+    // still resolve `/Contents 4 0 R` to object 4's stream
+    val base = inlineImagePdf
+    val s = new String(base, ISO_8859_1)
+    val at = s.indexOf("endobj", s.indexOf("3 0 obj"))
+    for (damage <- Seq(" ", "0", "\u0000")) {
+      val bytes = base.clone()
+      bytes(at + 4) = damage.charAt(0).toByte // "endo?j"
+      assert(Pdf.splitPages(bytes).map(_.text) == Seq("after"), s"text, damage '$damage'")
+      assert(Pdf.splitPagesWords(bytes).map(_.text) == Seq("after"), s"words, damage '$damage'")
+      val imgs = Pdf.extractImages(bytes)
+      assert(imgs.map(i => (i.name, i.width, i.height)) == Seq(("BI#1", 4, 3)), s"images, damage '$damage'")
+    }
+  }
+
   test("degenerate inputs: empty, header-only, random bytes, huge-claim /Length") {
     val rnd = new java.util.Random(7)
     val randomJunk = new Array[Byte](4096)

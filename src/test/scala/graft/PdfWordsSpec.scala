@@ -428,4 +428,18 @@ class PdfWordsSpec extends AnyFunSuite {
     assert(imgs.map(i => (i.name, i.width, i.height, i.format)) == Seq(("BI#1", 6, 4, "jpeg")))
     assert(imgs.head.data.sameElements(jpeg))
   }
+
+  test("an unterminated << skips alone: the show-text operators after it still read") {
+    // one damaged byte turned the font operand into a dict opener that
+    // never closes (the PdfFuzzSpec `columns` mutant shape)
+    val bytes = onePage("BT << /Type /F1 10 Tf 100 500 Td (alpha) Tj ET " +
+      "BT /F1 10 Tf 200 500 Td (beta) Tj ET")
+    assert(Pdf.splitPages(bytes).map(_.text) == Seq("alpha beta"))
+    assert(Pdf.splitPagesWords(bytes).map(_.text) == Seq("alpha", "beta"))
+    // a closed dict operand still skips whole: its string never shows
+    val closed = onePage("BT /F1 10 Tf 100 500 Td /Span << /ActualText (gamma) >> BDC " +
+      "(alpha) Tj EMC ET")
+    assert(Pdf.splitPages(closed).map(_.text) == Seq("alpha"))
+    assert(Pdf.splitPagesWords(closed).map(_.text) == Seq("alpha"))
+  }
 }
