@@ -155,19 +155,21 @@ object Bench {
       // block documents), so accidental band collisions between
       // unrelated clusters are filtered here, not absorbed into
       // components
-      val (rawPairs, sigs) = graft.operators.Dedup.minhashLshPairsWithSigs(
+      val pairs = graft.operators.Dedup.minhashLshPairs(
         docs, "doc_id", "text", numHashes = nHashes, bands = nBands,
         jaccardThreshold = 0.8)
-      val pairs = rawPairs.select(col("id_a"), col("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        .select(col("id_a"), col("id_b"))
+        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val nPairs = pairs.count()
       val lshSec = (System.nanoTime() - t0) / 1e9
       // disk-lifecycle discipline — at 18 M docs the spill volume is
       // the binding constraint (measured: two overflows before this):
-      // pairs are materialized, so the multi-GB signature cache and
-      // the doc corpus release NOW; System.gc() nudges the
-      // ContextCleaner to delete the dead stages' shuffle files
-      sigs.unpersist(); docs.unpersist(); System.gc()
+      // pairs are materialized and nothing references the unsliced
+      // pairs plan, so the multi-GB signature checkpoint is garbage;
+      // the doc corpus releases NOW, and System.gc() nudges the
+      // ContextCleaner to delete the signature blocks and the dead
+      // stages' shuffle files (SCALE.md "MinHash-LSH signatures")
+      docs.unpersist(); System.gc()
       // the planted corpus IS range(n), so the node set needs no scan
       val nodes = spark.range(n).select(col("id"))
       val t1 = System.nanoTime()
@@ -175,7 +177,7 @@ object Bench {
         nodes, pairs, maxIter = 20)
       val nClusters = labels.select("label").distinct().count()
       val compSec = (System.nanoTime() - t1) / 1e9
-      pairs.unpersist(); System.gc() // labels are localCheckpointed
+      System.gc() // labels are localCheckpointed
       val t2 = System.nanoTime()
       // survivor selection ALONE: reuse the labels already computed
       // above (canonicalSurvivors would re-run the whole propagation

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   * operator materializes that `(id, sig, bands)` frame once per call
   * (an eager `localCheckpoint` job at call time), so the kernel runs
   * once per input row however many joins read the frame.
+  *
+  * Every operator returns an unordered relation: a caller that needs
+  * row order (a query sink, a test's collect) sorts where it reads.
   */
 object Dedup {
 
@@ -129,50 +132,25 @@ object Dedup {
 
   /** LSH near-duplicate pairs via banded MinHash: band-bucket join on
     * (band, bandHash), then signature-agreement Jaccard estimate.
-    * Returns (id_a, id_b, jaccard_est) with id_a < id_b.
+    * Returns (id_a, id_b, jaccard_est) with id_a < id_b, unordered.
     *
     * One signature pass per call: the `(id, sig, bands)` frame is
     * stored by an eager `localCheckpoint(true)` (one job at call time)
     * and feeds both band-join sides and both verify joins. A lost
     * executor loses those blocks with no lineage to recompute them —
     * the local-mode failure semantics of every localCheckpoint here.
+    * The ContextCleaner drops the blocks once nothing references the
+    * returned plan, so a caller that checkpoints the pairs it needs and
+    * lets this frame go holds the pairs alone (Bench's dedup_at_scale).
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      jaccardThreshold: Double = 0.8): DataFrame =
-    minhashLshPairsImpl(df, idCol, textCol, k, numHashes, bands, jaccardThreshold,
-      persistSigs = false)._1
-
-  /** [[minhashLshPairs]] with the signature frame `(id, sig, bands)`
-    * PERSISTED and returned instead of checkpointed — callers that
-    * materialize the pairs (persist + count) must then
-    * `sigs.unpersist()`: at 10⁷-doc scale the ~0.65 KB/doc signature
-    * cache is multiple GB of storage that nothing downstream of the
-    * materialized pairs reads (the dedup_at_scale bench overflowed its
-    * spill volume holding two corpus sizes' caches concurrently). The
-    * cache is filled by the first job over the pairs, once per
-    * partition, and every consumer reads it.
-    */
-  def minhashLshPairsWithSigs(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      jaccardThreshold: Double = 0.8): (DataFrame, DataFrame) =
-    minhashLshPairsImpl(df, idCol, textCol, k, numHashes, bands, jaccardThreshold,
-      persistSigs = true)
-
-  private def minhashLshPairsImpl(df: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int, bands: Int, jaccardThreshold: Double,
-      persistSigs: Boolean): (DataFrame, DataFrame) = {
-    val sigs0 = signatures(df, idCol, textCol, k, numHashes, bands)
-    val sigs =
-      if (persistSigs) sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigs0.localCheckpoint(true)
-
-    val cand = sigAgreement(bandCandidates(bandKeys(sigs)), "id_a", sigs, "id_b", sigs)
-    val pairs = cand.select(col("id_a"), col("id_b"),
+      jaccardThreshold: Double = 0.8): DataFrame = {
+    val sigs = signatures(df, idCol, textCol, k, numHashes, bands).localCheckpoint(true)
+    sigAgreement(bandCandidates(bandKeys(sigs)), "id_a", sigs, "id_b", sigs)
+      .select(col("id_a"), col("id_b"),
         (col("agree").cast("double") / numHashes).as("jaccard_est"))
       .filter(col("jaccard_est") >= jaccardThreshold)
-      .orderBy("id_a", "id_b")
-    (pairs, sigs)
   }
 
   /** The band-collision candidate pairs alone (no verify) — public so
@@ -289,7 +267,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(inter / (size(col("sh_a")) + size(col("sh_b")) - inter), 4).as("jaccard"))
       .filter(col("jaccard") >= jaccardThreshold)
-      .orderBy("id_a", "id_b")
   }
 
   /** Count of agreeing MinHash slots between two signatures — the
@@ -333,6 +310,17 @@ object Dedup {
     sig
   }
 
+  /** `keyed`, a frame with a SimHash `sig` column, exploded to one row
+    * per 16-bit band: its own columns plus `band` and `band_bits`, the
+    * blocking key of both SimHash operators. Shift amounts are
+    * Scala-side (Column shifts need literal ints).
+    */
+  private def simhashBands(keyed: DataFrame): DataFrame = {
+    val bandCols = (0 until 4).map(b =>
+      struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("band_bits")))
+    keyed.select(col("*"), inline(array(bandCols: _*)))
+  }
+
   /** SimHash near-dup pairs: 4 × 16-bit bands, hamming ≤ maxHamming. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
@@ -342,12 +330,7 @@ object Dedup {
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) => (id, simhash64(if (t == null) "" else t)) })
       .toDF("id", "sig")
-    // 16-bit band values with Scala-side shift amounts (Column shifts
-    // need literal ints)
-    val bandCols = (0 until 4).map(b =>
-      struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("band_bits")))
-    val exploded = sigs.select(col("id"), col("sig"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.band_bits").as("band_bits"))
+    val exploded = simhashBands(sigs)
     val a = exploded.select(col("band"), col("band_bits"), col("id").as("id_a"), col("sig").as("sig_a"))
     val b = exploded.select(col("band"), col("band_bits"), col("id").as("id_b"), col("sig").as("sig_b"))
     val hamming = (0 until 64).map(j =>
@@ -357,7 +340,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), hamming.as("hamming")).distinct()
       .filter(col("hamming") <= maxHamming)
-      .orderBy("id_a", "id_b")
   }
 
   /** Canonical token-bag fingerprint: XXH64 of the sorted lowercase
@@ -394,17 +376,12 @@ object Dedup {
         (id, simhash64(s), bagHash64(s))
       })
       .toDF("id", "sig", "bag_hash")
-    val bandCols = (0 until 4).map(b =>
-      struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("band_bits")))
-    val exploded = keyed.select(col("id"), col("bag_hash"),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bag_hash"), col("bb.band").as("band"), col("bb.band_bits").as("band_bits"))
+    val exploded = simhashBands(keyed)
     exploded.as("a").join(exploded.as("b"),
         col("a.band") === col("b.band") && col("a.band_bits") === col("b.band_bits") &&
           col("a.id") < col("b.id"))
       .filter(col("a.bag_hash") === col("b.bag_hash")) // exact verify
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      .orderBy("id_a", "id_b")
   }
 
   /** Normalized distinct shingle arrays as a Column — the same value
@@ -492,7 +469,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         (inter / (size(col("sh_a")) + size(col("sh_b")) - inter)).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .orderBy("id_a", "id_b")
   }
 
   /** Exact dedup survivors (keep lowest id per content hash) —
@@ -530,11 +506,11 @@ object Dedup {
     *         (spec-tested superset of dups), `is_dup` exact
     *         (oracle-tested); removal is a join-back filter on the id
     *         downstream. Null text is definitively new. `handles` are
-    *         the frames this call PERSISTED (the minhashLshPairsWithSigs
-    *         precedent): Spark's CacheManager holds cached plans until
-    *         an explicit unpersist, so a standing loop that drops them
-    *         accumulates two cached frames per micro-batch — one of
-    *         them the full (growing) history key set. Unpersist them
+    *         the frames this call PERSISTED: Spark's CacheManager
+    *         holds cached plans until an explicit unpersist, so a
+    *         standing loop that drops them accumulates two cached
+    *         frames per micro-batch — one of them the full (growing)
+    *         history key set. Unpersist them
     *         once the flags have materialized downstream; a one-shot
     *         caller may take `._1` and let the caches release when the
     *         session's plans go out of scope.
@@ -800,7 +776,7 @@ object Dedup {
       s"componentsWithRounds did not converge within maxIter=$maxIter rounds; " +
         "the pair graph has a longer chain diameter than near-dup " +
         "clusters should — raise maxIter or use componentsLargeSmallStarWithRounds")
-    (labels.orderBy("id"), iter)
+    (labels, iter)
   }
 
   /** Large-star/small-star connected components (Kiveris et al.,
@@ -868,8 +844,7 @@ object Dedup {
         "rounds — not expected for any graph at O(log² n); raise maxIter")
     (nodes.select(col("id").cast("long").as("id"))
       .join(edges.select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-      .orderBy("id"), iter)
+      .select(col("id"), coalesce(col("label"), col("id")).as("label")), iter)
   }
 
   /** SRP-band collision candidates alone (no cosine verify) — public
@@ -916,6 +891,5 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         Similarity.dot(col("v_a"), col("v_b")).as("cos"))
       .filter(col("cos") >= threshold)
-      .orderBy("id_a", "id_b")
   }
 }

@@ -187,20 +187,16 @@ object Serializers {
       .write.mode("overwrite").text(path)
 
   /** `SerializerFiles.load` (custom_serialize.py:258): recursive
-    * directory walk filtered by extension, optional deterministic sort
-    * — the reference's two-walk + zip mini-DAG collapses to one
-    * binaryFile scan with a glob.
+    * directory walk filtered by extension, unordered — the reference's
+    * two-walk + zip mini-DAG collapses to one binaryFile scan with a
+    * glob.
     */
-  def readFilesDir(spark: SparkSession, dir: String, extension: String,
-      sort: Boolean = true, maxDatapoints: Option[Int] = None): DataFrame = {
-    val df = spark.read.format("binaryFile")
+  def readFilesDir(spark: SparkSession, dir: String, extension: String): DataFrame =
+    spark.read.format("binaryFile")
       .option("pathGlobFilter", s"*.$extension")
       .option("recursiveFileLookup", "true")
       .load(dir)
       .select(col("path"), col("length"), col("content"))
-    val sorted = if (sort) df.orderBy("path") else df
-    maxDatapoints.fold(sorted)(sorted.limit)
-  }
 
   /** `SerializerCoco.load` (custom_serialize.py:582): the reference
     * builds in-memory `img_to_anns` hash indexes (CocoParser:349-375)
@@ -229,7 +225,7 @@ object Serializers {
     */
   def readPdfPages(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    readFilesDir(spark, dir, "pdf", sort = false)
+    readFilesDir(spark, dir, "pdf")
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -248,7 +244,7 @@ object Serializers {
     */
   def readPdfWords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    readFilesDir(spark, dir, "pdf", sort = false)
+    readFilesDir(spark, dir, "pdf")
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -269,7 +265,7 @@ object Serializers {
     */
   def readPdfPageDocs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    readFilesDir(spark, dir, "pdf", sort = false)
+    readFilesDir(spark, dir, "pdf")
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>

@@ -3,12 +3,15 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Scratch (not part of the driver contract): replicate Bench.scala's
-  * per-query timing protocol — same session shape (local[cpus],
-  * shuffle.partitions = cpus*4), same warm-then-time `.count()` — over
-  * all queries or a named subset, with N timed samples per query so a
-  * VM burst is visible as spread instead of corrupting a single
-  * reading. Prints one JSON line (median per query) plus per-sample
-  * arrays on stderr.
+  * per-query session shape (local[cpus], shuffle.partitions = cpus*4)
+  * and warm-then-time protocol over all queries or a named subset, with N
+  * timed samples per query so a VM burst is visible as spread instead
+  * of corrupting a single reading. Every run writes to the noop sink,
+  * which computes every column of every row and discards it: a
+  * `count()` lets the optimizer drop work no counted column needs (a
+  * key-unique left join, for one), so it can time a different plan.
+  * Prints one JSON line (median per query, `"sink":"noop"`) plus
+  * per-sample arrays on stderr.
   *
   * Usage: runMain graft.tools.BenchQueries [samples] [query ...]
   */
@@ -31,15 +34,8 @@ object BenchQueries {
     spark.sparkContext.setLogLevel("WARN")
     try { graft.SparkEntry.queries("x1_extract")(spark, sfDir).count() }
     catch { case _: Throwable => () }
-    // SPARK_GRAFT_NOOP=1: time with the noop sink (guide §1.4 — every
-    // column of every row computed and discarded) instead of count(),
-    // which can prune. The frozen Bench times count(); default matches
-    // it for comparability.
-    val noop = sys.env.get("SPARK_GRAFT_NOOP").contains("1")
-    def runOnce(name: String): Unit = {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      if (noop) df.write.format("noop").mode("overwrite").save() else df.count()
-    }
+    def runOnce(name: String): Unit =
+      graft.SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
     // a failed sample must NOT contribute a (typically fast)
     // elapsed-until-crash reading to the median — it poisons the JSON
     // line that before/after comparisons are built from; NaN marks it
@@ -70,7 +66,7 @@ object BenchQueries {
     // the excluded names ride the JSON too, so a total over fewer
     // queries cannot pass for a total over all of them
     val excluded = failed.map { case (k, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
-    println(s"""{"metric":"benchq","queries":$qs,"excluded":$excluded,"total_query_sec":${fmt(ok.map(_._2).sum)},"sf":"$sfDir","samples":$samples}""")
+    println(s"""{"metric":"benchq","queries":$qs,"excluded":$excluded,"total_query_sec":${fmt(ok.map(_._2).sum)},"sf":"$sfDir","samples":$samples,"sink":"noop"}""")
     spark.stop()
   }
 }

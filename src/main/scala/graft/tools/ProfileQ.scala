@@ -8,7 +8,8 @@ import scala.collection.mutable
   * one named query — warm run, then a timed run with a SparkListener
   * recording every job's duration, task count and first-stage name, so
   * a slow query decomposes into its actual Spark jobs instead of one
-  * opaque number.
+  * opaque number. Every run writes to the noop sink, as BenchQueries
+  * times, so the jobs are those of the whole result.
   *
   * Usage: runMain graft.tools.ProfileQ <query> [runs]
   */
@@ -55,23 +56,25 @@ object ProfileQ {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    def runOnce(): Unit =
+      graft.SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
 
     // warm (twice: first pass pays JIT+codegen, second confirms steady state)
     for (_ <- 1 to 2) {
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(spark, sfDir).count()
-      println(f"[profq] $name warm n=$n ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      runOnce()
+      println(f"[profq] $name warm ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     for (r <- 1 to runs) {
       jobs.synchronized { jobs.clear() }
       stages.synchronized { stages.clear() }
       record = true
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(spark, sfDir).count()
+      runOnce()
       val wall = (System.nanoTime() - t0) / 1e9
       record = false
       Thread.sleep(300) // let the listener bus drain
-      println(f"[profq] $name run$r n=$n wall=$wall%.3f s, jobs:")
+      println(f"[profq] $name run$r wall=$wall%.3f s, jobs:")
       var sum = 0.0
       jobs.synchronized {
         jobs.values.foreach { j =>

@@ -32,16 +32,16 @@ class SerializersSpec extends AnyFunSuite {
     assert(back.orderBy("doc_id").collect().sameElements(df.orderBy("doc_id").collect()))
   }
 
-  test("binary file directory source sorted by path") {
+  test("binary file directory source filters by extension") {
     val dir = Files.createTempDirectory("graft_bin")
     Files.writeString(dir.resolve("b.txt"), "bravo")
     Files.writeString(dir.resolve("a.txt"), "alpha")
     Files.writeString(dir.resolve("c.skip"), "nope")
     val df = Serializers.readFilesDir(spark, dir.toString, "txt")
-    val rows = df.collect()
-    assert(rows.length == 2)
-    assert(rows.map(_.getString(0)).toList == rows.map(_.getString(0)).sorted.toList)
-    assert(new String(rows(0).getAs[Array[Byte]]("content")) == "alpha")
+    val rows = df.collect().sortBy(_.getString(0))
+    assert(rows.length == 2 && rows.forall(_.getString(0).endsWith(".txt")))
+    assert(rows.map(r => new String(r.getAs[Array[Byte]]("content"))).toList ==
+      List("alpha", "bravo"))
   }
 
   test("coco-style pre-join: annotations grouped onto images") {

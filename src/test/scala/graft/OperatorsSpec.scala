@@ -176,7 +176,7 @@ class DedupSpec extends AnyFunSuite with org.scalatest.PrivateMethodTester {
     val d = Seq((1L, null: String), (2L, ""), (3L, null: String), (4L, "some other words"))
       .toDF("doc_id", "text")
     val pairs = Dedup.minhashLshExactPairs(d, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Double)].collect().toSeq.sorted
     assert(pairs == Seq((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0)))
   }
 
@@ -189,6 +189,32 @@ class DedupSpec extends AnyFunSuite with org.scalatest.PrivateMethodTester {
     // one per side: the batch and the history each sign once
     assert(lsh(Dedup.incrementalNearDup(d.filter(col("doc_id") >= 10000),
       d.filter(col("doc_id") < 10000), "doc_id", "text")) == 2)
+  }
+
+  test("no dedup operator plans a global sort: row order is the reading sink's") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    val d = docsWithDups.filter(col("doc_id") % 10000 < 20)
+    val emb = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.01)), (3L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "v")
+    val nodes = Seq(1L, 2L, 3L).toDF("id")
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val outputs = Seq(
+      "minhashLshPairs" -> Dedup.minhashLshPairs(d, "doc_id", "text"),
+      "minhashLshExactPairs" -> Dedup.minhashLshExactPairs(d, "doc_id", "text"),
+      "simhashPairs" -> Dedup.simhashPairs(d, "doc_id", "text"),
+      "simhashExactPairs" -> Dedup.simhashExactPairs(d, "doc_id", "text"),
+      "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(d, "doc_id", "text"),
+      "embeddingNearDupPairs" -> Dedup.embeddingNearDupPairs(emb, "vec_id", "v"),
+      "componentsWithRounds" -> Dedup.componentsWithRounds(nodes, pairs)._1,
+      "componentsLargeSmallStarWithRounds" ->
+        Dedup.componentsLargeSmallStarWithRounds(nodes, pairs)._1)
+    val sorting = outputs.collect { case (name, df)
+      if df.queryExecution.optimizedPlan.find {
+        case s: Sort => s.global
+        case _ => false
+      }.isDefined => name }
+    assert(sorting.isEmpty, s"${sorting.length} operators sort globally: ${sorting.mkString(", ")}")
   }
 
   test("signature-agreement prefilter only engages at numHashes >= 64") {
@@ -988,9 +1014,9 @@ class ComponentsSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 12L), (12L, 14L),
       (20L, 21L), (21L, 22L), (22L, 20L), (14L, 16L), (5L, 7L)).toDF("id_a", "id_b")
     val naive = Dedup.componentsWithRounds(nodes, pairs)._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
     val stars = Dedup.componentsLargeSmallStarWithRounds(nodes, pairs)._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
     assert(stars == naive)
   }
 
@@ -1031,9 +1057,9 @@ class ComponentsSpec extends AnyFunSuite {
       val nodes = (1L to n.toLong).toDF("id")
       val pairs = edges.toDF("id_a", "id_b")
       val naive = Dedup.componentsWithRounds(nodes, pairs, maxIter = 64)._1
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
       val stars = Dedup.componentsLargeSmallStarWithRounds(nodes, pairs)._1
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
       assert(naive == expect, s"seed $seed: propagation != union-find")
       assert(stars == expect, s"seed $seed: stars != union-find")
     }
