@@ -20,33 +20,12 @@ import graft.sources.Turns
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = session(cores, cores * 4)
-
   private val procs = Runtime.getRuntime.availableProcessors()
 
   /** The default scaling pair: N → 4N with 4N = every host processor. */
   private def hostWidths(procs: Int): (Int, Int) = {
     val narrow = math.max(1, procs / 4)
     (narrow, math.max(narrow + 1, procs))
-  }
-
-  /** `partitions` is explicit so the two scaling widths can run the
-    * IDENTICAL plan: same partition count → same number of tasks with
-    * the same per-task work, only the executor width varies — the
-    * judge-required partitions-held-constant protocol. (4 partitions
-    * per core at the widest width also evens out per-partition load
-    * variance: job time = slowest task.)
-    */
-  private def session(cores: Int, partitions: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** Scaled-up deterministic turn table: documents × multiplier. */
@@ -131,7 +110,7 @@ object Bench {
     // the binding constraint at this scale (64×16 peaked ~100 GB)
     val nHashes = sys.env.getOrElse("SPARK_GRAFT_DEDUP_HASHES", "32").toInt
     val nBands = sys.env.getOrElse("SPARK_GRAFT_DEDUP_BANDS", "8").toInt
-    val spark = session(cpus, cpus * 8)
+    val spark = LocalSpark.session(cpus, cpus * 8)
     import org.apache.spark.sql.DataFrame
     def planted(n: Long): DataFrame = {
       // 4 md5-hex words per doc (131 chars), identical across a
@@ -221,7 +200,7 @@ object Bench {
     if (sys.env.get("SPARK_GRAFT_DEDUP_SF1").contains("1")) { dedupAtScale(cpus); return }
 
     // ---- per-query timings ----
-    var spark = session(cpus)
+    var spark = LocalSpark.session(cpus, cpus * 4)
     // warm the extraction + codegen paths on the SAME sfDir the timed
     // queries use (round 1 warmed entry()'s hardcoded sf0.001, which
     // silently no-ops on other hosts), then warm EACH query once —
@@ -424,6 +403,10 @@ object Bench {
         (defNarrow, defWide)
       }
     val widthFactor = wide.toDouble / narrow
+    // both scaling widths run the IDENTICAL plan: same partition count
+    // → same number of tasks with the same per-task work, only the
+    // executor width varies (4 partitions per core at the widest width
+    // also evens out per-partition load variance: job time = slowest task)
     val ScalingPartitions = wide * 4
     def median(xs: Seq[(Long, Double)]): (Long, Double) =
       xs.sortBy(_._2).apply(xs.length / 2)
@@ -438,11 +421,11 @@ object Bench {
     val runs8 = scala.collection.mutable.ListBuffer.empty[(Long, Double)]
     val runs32 = scala.collection.mutable.ListBuffer.empty[(Long, Double)]
     def cycleOnce(): Unit = {
-      spark = session(narrow, ScalingPartitions)
+      spark = LocalSpark.session(narrow, ScalingPartitions)
       timeExtraction(spark, warmDir) // per-session codegen warm-up
       runs8 ++= Seq.fill(scalingRuns)(timeExtraction(spark, turnsDir))
       spark.stop()
-      spark = session(wide, ScalingPartitions)
+      spark = LocalSpark.session(wide, ScalingPartitions)
       timeExtraction(spark, warmDir)
       runs32 ++= Seq.fill(scalingRuns)(timeExtraction(spark, turnsDir))
       spark.stop()
@@ -488,11 +471,11 @@ object Bench {
         // median (a median of 2 is just the max — one VM burst on a
         // single narrow run would inflate the reported criterion)
         for (_ <- 1 to 3) {
-          spark = session(2, ScalingPartitions)
+          spark = LocalSpark.session(2, ScalingPartitions)
           timeExtraction(spark, warmDir)
           runs2u += timeExtraction(spark, turnsDir)
           spark.stop()
-          spark = session(8, ScalingPartitions)
+          spark = LocalSpark.session(8, ScalingPartitions)
           timeExtraction(spark, warmDir)
           runs8u += timeExtraction(spark, turnsDir)
           spark.stop()
@@ -526,7 +509,7 @@ object Bench {
     val total = results.values.sum
     println(
       s"""{"metric":"turns_per_sec","value":${f"$tput32%.1f"},"unit":"turns/sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","total_query_sec":${f"$total%.3f"},""" +
+      s""""queries":$qs,"sf":"$sfDir","total_query_sec":${f"$total%.3f"},"sink":"count",""" +
       slowJson +
       s""""bench_mult":$mult,""" +
       growth +

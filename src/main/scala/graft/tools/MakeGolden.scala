@@ -48,10 +48,7 @@ object MakeGolden {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: MakeGolden <sf_dir> <resources_dir>")
     val Array(sfDir, resources) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(4, 4)
     for ((file, rows) <- Seq(BlocksFile -> blocksRows(spark, sfDir),
                              WordsLinesFile -> wordsLinesRows(spark, sfDir))) {
       java.nio.file.Files.write(java.nio.file.Paths.get(resources, file),
